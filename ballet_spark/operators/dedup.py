@@ -1694,14 +1694,30 @@ def load_lsh_index(spark, name: str) -> "LshIndex":
     """Load a :func:`save_lsh_index` pair back WITH bucket metadata
     (``spark.table``, not ``read.parquet`` — a raw file read loses the
     distribution info and reintroduces the index-side shuffle).
-    Refuses an index whose band-hash format stamp is missing or
-    different: its bucket values were produced by another hash recipe,
-    so a probe would silently find nothing."""
+    Refuses a missing index, and an index whose band-hash format stamp
+    is missing or different: its bucket values were produced by
+    another hash recipe (or its save never finished), so a probe would
+    silently find nothing."""
+    if not spark.catalog.tableExists(f"{name}_buckets"):
+        raise ValueError(
+            f"LSH index {name!r} not found: table {name}_buckets does "
+            "not exist — build it with save_lsh_index first"
+        )
     props = {
         r["key"]: r["value"]
         for r in spark.sql(f"SHOW TBLPROPERTIES {name}_buckets").collect()
     }
     fmt = props.get("ballet_spark.band_hash")
+    if fmt is None:
+        # save_lsh_index stamps last, so an unstamped table is a save
+        # that stopped between the bucket write and the stamp (or one
+        # written before the stamp existed)
+        raise ValueError(
+            f"LSH index {name!r} has no band-hash format stamp: its "
+            "save was interrupted (or it predates the stamp), so its "
+            "bucket values cannot be trusted; rebuild the index with "
+            "save_lsh_index"
+        )
     if fmt != BAND_HASH_FORMAT:
         raise ValueError(
             f"LSH index {name!r} was written under band-hash format "

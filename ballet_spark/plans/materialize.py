@@ -30,6 +30,21 @@ distributed, restartable protocol:
   accumulated in decimal(38,0) so 10^12-row sums can't overflow, then
   folded to 63 bits.
 
+Driver cost model. What the driver builds before the write job
+starts is paid on every backfill, so it is kept independent of
+``n_units``:
+
+- the digest grid has ``n_units × (2 + features)`` aggregates, but
+  only ``1 + features`` hash expressions: the row hash and each
+  feature's ``(entity, time, value)`` hash are built once and shared
+  by every unit's ``unit == u`` predicate (the plan is the same as
+  building them per cell; only the py4j round trips go);
+- the lineage rows are appended from a pyarrow Table, which Spark
+  plans as a LocalRelation: no RDD of pickled rows built through
+  ``parallelize`` and no Python worker, for a few hundred rows;
+- resume reads the lineage table in one ``distinct (unit, n_units)``
+  collect.
+
 Deterministic unit assignment (hash of the entity key, never
 ``rand()``) is what makes resume produce identical partitions
 (SURVEY.md §7 hard parts).
@@ -156,12 +171,12 @@ def completed_units(
     mine = lin.filter(
         (F.col("feature_set") == fset) & (F.col("input_snapshot") == snapshot)
     )
-    if n_units is not None and "n_units" in lin.columns:
-        seen = {
-            r["n_units"]
-            for r in mine.select("n_units").distinct().collect()
-            if r["n_units"] is not None
-        }
+    # one collect serves both the completed set and the n_units check
+    # (lineage written before n_units was recorded has no such column)
+    has_n = "n_units" in lin.columns
+    rows = mine.select("unit", *(["n_units"] if has_n else [])).distinct().collect()
+    if n_units is not None and has_n:
+        seen = {r["n_units"] for r in rows if r["n_units"] is not None}
         if seen - {int(n_units)}:
             raise ValueError(
                 f"lineage for feature_set={fset} snapshot={snapshot} was "
@@ -170,8 +185,22 @@ def completed_units(
                 "— reuse the original n_units or materialize under a "
                 "new snapshot"
             )
-    rows = mine.select("unit").distinct().collect()
     return {r["unit"] for r in rows}
+
+
+def _append_rows(
+    spark: SparkSession, rows: list[tuple], schema: str, path: str
+) -> None:
+    """Append driver-side ``rows`` (tuples in ``schema``'s column order)
+    to the parquet table at ``path``. The rows go in as a pyarrow
+    Table, which Spark plans as a LocalRelation instead of an RDD of
+    pickled rows. The Table is cast to ``schema``, so the parquet
+    schema is the one the DDL string names."""
+    import pyarrow as pa
+
+    names = [field.split()[0] for field in schema.split(",")]
+    table = pa.table(dict(zip(names, map(list, zip(*rows)))))
+    spark.createDataFrame(table, schema).write.mode("append").parquet(path)
 
 
 def row_hash(cols: Sequence[str]) -> F.Column:
@@ -321,24 +350,27 @@ def materialize(
         out_cols = [
             c for c in feat_cols if c not in (entity_col, time_col)
         ] if feature_lineage_path is not None else []
+        # each hash Column is built ONCE and shared by every unit's
+        # aggregate: the plan is the same, and the driver pays one
+        # py4j chain per hash instead of one per cell of the grid
+        unit_hash = row_hash(feat_cols)
+        # hash (entity, time, value), not the value alone: a regression
+        # that PERMUTES a feature's values across rows keeps the value
+        # multiset (sum of value-only hashes unchanged) but changes
+        # every (key, value) pairing — exactly the case per-feature
+        # attribution exists to catch
+        feat_hash = {c: row_hash([entity_col, time_col, c]) for c in out_cols}
+        unit = F.col("unit")
         obs = Observation()
         exprs = []
         for u in batch:
-            hit = F.col("unit") == u
+            hit = unit == u
             exprs.append(F.sum(F.when(hit, 1).otherwise(0)).alias(f"n_{u}"))
-            exprs.append(F.sum(F.when(hit, row_hash(feat_cols))).alias(f"d_{u}"))
-            for c in out_cols:
-                # hash (entity, time, value), not the value alone: a
-                # regression that PERMUTES a feature's values across
-                # rows keeps the value multiset (sum of value-only
-                # hashes unchanged) but changes every (key, value)
-                # pairing — exactly the case per-feature attribution
-                # exists to catch
-                exprs.append(
-                    F.sum(
-                        F.when(hit, row_hash([entity_col, time_col, c]))
-                    ).alias(f"f_{u}__{c}")
-                )
+            exprs.append(F.sum(F.when(hit, unit_hash)).alias(f"d_{u}"))
+            exprs.extend(
+                F.sum(F.when(hit, h)).alias(f"f_{u}__{c}")
+                for c, h in feat_hash.items()
+            )
         observed = matrix.observe(obs, *exprs)
         # dynamic partition overwrite: recomputing a unit REPLACES its
         # directory (idempotent) — a crash between this commit and the
@@ -379,12 +411,8 @@ def materialize(
                 for u in batch
                 for c in out_cols
             ]
-            spark.createDataFrame(frows, FEATURE_LINEAGE_SCHEMA).write.mode(
-                "append"
-            ).parquet(feature_lineage_path)
-        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).write.mode(
-            "append"
-        ).parquet(lineage_path)
+            _append_rows(spark, frows, FEATURE_LINEAGE_SCHEMA, feature_lineage_path)
+        _append_rows(spark, lineage_rows, LINEAGE_SCHEMA, lineage_path)
         n_done += len(batch)
 
     return {

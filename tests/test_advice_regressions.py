@@ -880,6 +880,45 @@ def test_lsh_index_band_hash_format_stamp(spark):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_load_lsh_index_missing_table_names_the_index(spark):
+    """A missing index raises a ValueError naming it, not Spark's raw
+    TABLE_OR_VIEW_NOT_FOUND from SHOW TBLPROPERTIES."""
+    from ballet_spark.operators.dedup import load_lsh_index
+
+    with pytest.raises(ValueError, match="'no_such_lsh_index' not found"):
+        load_lsh_index(spark, "no_such_lsh_index")
+
+
+def test_load_lsh_index_unstamped_is_an_interrupted_save(spark):
+    """An index without the format stamp (the save stopped before the
+    stamp) gets its own message, not the different-recipe one."""
+    from ballet_spark.operators.dedup import (
+        load_lsh_index,
+        minhash_lsh_index,
+        save_lsh_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "one two three four five six"), (2, "seven eight nine ten")],
+        "doc_id long, text string",
+    )
+    save_lsh_index(
+        minhash_lsh_index(docs, num_hashes=8, bands=4), "unstamped_test",
+        n_buckets=4,
+    )
+    spark.sql(
+        "ALTER TABLE unstamped_test_buckets UNSET TBLPROPERTIES "
+        "('ballet_spark.band_hash')"
+    )
+    try:
+        with pytest.raises(ValueError, match="interrupted") as e:
+            load_lsh_index(spark, "unstamped_test")
+        assert "written under" not in str(e.value)
+    finally:
+        for t in ("unstamped_test_buckets", "unstamped_test_grams"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_decode_jpeg_truncated_segment_header_value_error():
     from ballet_spark.functions.jpeg import decode_jpeg
 
