@@ -60,6 +60,14 @@ def release_caches(scope: str | None = "dedup") -> int:
     return n
 
 
+# analyzed-plan nodes that shuffle (or sort) their input: anything
+# downstream of one already has >= shuffle-partitions parallelism
+_SHUFFLE_NODES = frozenset({
+    "Repartition", "RepartitionByExpression", "RebalancePartitions",
+    "Aggregate", "Distinct", "Deduplicate", "Join", "Window", "Sort",
+})
+
+
 def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     """Round-robin a narrow input across the cluster's cores when it
     arrives in fewer partitions — the single-small-file (often
@@ -69,9 +77,8 @@ def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     idles. A real many-split 100 TB table already has >= cores
     partitions and passes through untouched, so the extra exchange
     exists exactly when it is trivially cheap (input smaller than one
-    production split) and vanishes at scale. The canonical guard the
-    dedup operators have always used (dedup._spread), shared here so
-    every per-row-heavy operator applies the same rule.
+    production split) and vanishes at scale. The one spread rule:
+    every per-row-heavy operator calls this directly.
 
     Streaming DataFrames pass through untouched: their partition count
     is not knowable at plan time (``df.rdd`` is illegal on a stream)
@@ -83,8 +90,9 @@ def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     plan that already contains a shuffle-introducing node (explicit
     repartition, aggregate, join, window, distinct, global sort)
     inherits >= spark.sql.shuffle.partitions parallelism downstream,
-    so the probe is skipped for those via one cheap analyzed-plan
-    string check; the probe (and possible spread) only runs for
+    so the probe is skipped for those by one walk over the analyzed
+    plan's node names (never its text: a column named ``Join`` must
+    not count as a join); the probe (and possible spread) only runs for
     narrow map lineages over a source — the one shape that can
     actually be a single small file.
 
@@ -102,15 +110,13 @@ def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     if df.isStreaming:
         return df
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(
-            m in plan
-            for m in (
-                "Repartition", "Aggregate", "Join", "Window",
-                "Deduplicate", "Sort ",
-            )
-        ):
-            return df
+        stack = [df._jdf.queryExecution().analyzed()]
+        while stack:
+            node = stack.pop()
+            if node.nodeName() in _SHUFFLE_NODES:
+                return df
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
     except Exception:
         pass  # fall through to the exact probe
     target = df.sparkSession.sparkContext.defaultParallelism

@@ -50,10 +50,10 @@ def connected_components(
     Small-graph fast path: near-dup PAIR graphs are tiny relative to
     the corpus (edges exist only between actual duplicates), and each
     distributed round costs a fixed multi-job overhead that dwarfs the
-    work when the edge list is thousands of rows. When the
-    materialized edge count is at most ``small_graph_threshold`` the
-    components are solved with one bounded collect + union-find on
-    the driver — the same capped-collect discipline as
+    work when the edge list is thousands of rows. One collect capped at
+    ``small_graph_threshold + 1`` edges decides the path: at most
+    ``small_graph_threshold`` edges are solved by union-find on the
+    driver — the same capped-collect discipline as
     ``frequent_lines`` / ``head_keys`` (200k edges ≈ a few MB), with
     identical output (min reachable id per node). Larger graphs take
     the distributed loop unchanged."""
@@ -63,9 +63,12 @@ def connected_components(
     pairs = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
         eager=True
     )
-    n_edges = pairs.count()  # on checkpointed blocks — no recompute
-    if n_edges <= small_graph_threshold:
-        rows = pairs.collect()
+    # one capped collect decides the path AND feeds the fast path (no
+    # separate count job); over the cap the distributed loop runs
+    rows = pairs.limit(small_graph_threshold + 1).collect()
+    if len(rows) <= small_graph_threshold:
+        import pyarrow as pa
+
         parent: dict = {}
 
         def find(x):
@@ -76,8 +79,7 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for row in rows:
-            a, b = row["a"], row["b"]
+        for a, b in rows:
             if a not in parent:
                 parent[a] = a
             if b not in parent:
@@ -88,10 +90,14 @@ def connected_components(
                 # smallest id at all times
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        out = [(x, find(x)) for x in parent]
+        # a pyarrow Table cast to the DDL plans as a LocalRelation (no
+        # RDD of pickled rows, so downstream joins start no Python
+        # worker); an empty graph still gets the typed schema
         schema = pairs.schema["a"].dataType.simpleString()
+        ids = list(parent)
         result = pairs.sparkSession.createDataFrame(
-            out, f"id {schema}, component {schema}"
+            pa.table({"id": ids, "component": [find(x) for x in ids]}),
+            f"id {schema}, component {schema}",
         )
         pairs.unpersist()
         return result

@@ -39,7 +39,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ballet_spark.cache import persist_tracked, release_caches  # noqa: F401 (re-export)
+from ballet_spark.cache import (  # noqa: F401 (release_caches: re-export)
+    persist_tracked,
+    release_caches,
+    spread_small_input,
+)
 
 # 2^31-1: affine permutations a*h+b stay < 2^62, no int64 overflow
 # under ANSI arithmetic while keeping a proper Mersenne-prime field.
@@ -85,16 +89,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
         )
         .select(id_col, "content_md5", "n_copies")
     )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Single-file small inputs arrive as one partition; spread them
-    across cores before CPU-heavy shingle/signature stages (no-op when
-    the source is already parallel, e.g. a many-file 100 TB table).
-    Canonical implementation: :func:`ballet_spark.cache.spread_small_input`."""
-    from ballet_spark.cache import spread_small_input
-
-    return spread_small_input(df)
 
 
 def tokens_col(text_col):
@@ -309,7 +303,7 @@ def gram_hashes(
             )
             yield pa.RecordBatch.from_arrays([batch.column(0), arr], ["id", "hs"])
 
-    out = _spread(
+    out = spread_small_input(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     ).mapInArrow(kernel, f"id {id_t}, hs array<bigint>")
     return out.filter(F.size("hs") > 0)
@@ -394,7 +388,7 @@ def _gram_hash_sig(
                 [batch.column(0), hs_arr, sig_arr], ["id", "hs", "signature"]
             )
 
-    out = _spread(
+    out = spread_small_input(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
     ).mapInArrow(
         kernel, f"id {id_t}, hs array<bigint>, signature array<bigint>"
@@ -721,13 +715,16 @@ def embedding_neardup_pairs(
 
     DEFAULT PATH (the 100 TB shape): band-OR SRP LSH — each vector is
     bucketed in ``n_tables`` independent 2^n_planes-bucket tables;
-    candidate pairs share a bucket in ANY table (equi-key self-join,
-    linear shuffles), then candidates are exact-cosine verified. Miss
+    candidate pairs share a bucket in ANY table (grouped on the (tbl,
+    bucket) equi-key, linear shuffles) and are exact-cosine verified
+    inside their group. Miss
     probability for a pair at angle θ is (1-(1-θ/π)^b)^L — ≈8e-5 per
     pair at cosine 0.95 with b=8, L=16; tests assert recall ≥ 0.95 on
     planted near-duplicates. ``exact=True`` is the all-pairs escape
     hatch for small-corpus audits ONLY (quadratic join — never the
     default)."""
+    import itertools
+
     import numpy as np
 
     from ballet_spark.operators.similarity import (
@@ -746,42 +743,38 @@ def embedding_neardup_pairs(
             .filter(F.col("cosine") >= threshold)
         )
 
-    # Blockwise per-bucket verify (one shuffle, no pair materialization).
-    # The old shape — bucket self-join → distinct → two vector-attach
-    # joins → pair-wise Arrow cosine — materialized EVERY candidate
-    # pair: measured at 20k vectors / sf1.0, 320k bucket rows exploded
-    # into 14.9M candidate pairs (the distinct alone was 18.6s because
-    # AQE had already coalesced the small pre-join shuffle down to 2
-    # tasks, and coalescing cannot see a join's output exploding), then
-    # the verify joins shipped ~14M pairs × two 64-double vectors
-    # (~12 GB) through the Arrow boundary. Verify-before-distinct
-    # inverts it: vectors shuffle ONCE to their (tbl, bucket) groups
-    # (n_tables × corpus rows — linear), each bucket scores its own
-    # pairs with one numpy matmul block, and only pairs PASSING the
-    # threshold (1,115 of 14.9M at sf1.0) ever become rows. The pair
-    # qualifies iff it shares ≥1 bucket AND cosine ≥ threshold — the
-    # same set as candidates-then-verify, deduped across tables by the
-    # final groupBy over bit-identical per-table cosine copies. Float
-    # recipe: dot-first matmul, one division, zero-norm→1 — exactly
-    # semantic_dedup's kernel, proven hash-identical to the SQL
-    # oracles' sequential-sum cosine at 4- and 6-decimal grids.
-    base = _spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
+    # Blockwise per-bucket verify (one shuffle, no pair materialization;
+    # candidate pairs were 14.9M of 320k bucket rows at 20k vectors /
+    # sf1.0). Vectors shuffle ONCE to their (tbl, bucket) groups
+    # (n_tables × corpus rows — linear), each group scores its own
+    # pairs in numpy matmul blocks, and only pairs PASSING the
+    # threshold become rows. A pair qualifies iff it shares ≥1 bucket
+    # AND cosine ≥ threshold; the final groupBy collapses the
+    # bit-identical copies from several tables. Float recipe:
+    # dot-first matmul, one division, zero-norm→1 — semantic_dedup's
+    # kernel, hash-identical to the SQL oracles' sequential-sum cosine
+    # at 4- and 6-decimal grids.
+    #
+    # Python boundary: two mapInArrow passes over flat Arrow buffers —
+    # lsh_bucket_tables (which also spreads a single-split input) and
+    # _verify, which reads partitions sorted by (tbl, bucket, id) and
+    # scores every group of a batch in one call. A grouped pandas
+    # apply paid a pandas DataFrame, a sort and an object-column
+    # np.stack PER GROUP, more than the scoring itself.
     id_t = df.schema[id_col].dataType.simpleString()
     bucketed = lsh_bucket_tables(
-        base, "v", dim, n_planes, n_tables, seed
-    ).select("id", "v", "tbl", "bucket")
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        "v", dim, n_planes, n_tables, seed,
+    ).select("tbl", "bucket", "id", "v")
 
-    def _verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        m = len(pdf)
-        if m < 2:
-            return empty
-        pdf = pdf.sort_values("id", kind="mergesort").reset_index(drop=True)
-        ids = pdf["id"].to_numpy()
-        M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+    def _score_group(M):
+        """Lists of (row_a, row_b, cosine) arrays: the passing pairs of
+        one (tbl, bucket) group whose rows are in id order; positions
+        decide id_a < id_b."""
+        m = len(M)
         nrm = np.linalg.norm(M, axis=1)
         nrm[nrm == 0.0] = 1.0
-        frames = []
+        ra, rb, cs = [], [], []
         # block height bounds the B×m score matrix (same discipline as
         # semantic_dedup; n_planes is sized so buckets stay small, this
         # bounds memory even on a pathological hot bucket)
@@ -792,8 +785,8 @@ def embedding_neardup_pairs(
             # differs from the per-pair (A*B).sum in the last ulps, so
             # survivors are re-scored below with exactly cosine_udf's
             # float recipe — emitted doubles are bit-identical to the
-            # old join+Arrow verify path. The 1e-6 margin dwarfs the
-            # ~1e-15 relative matmul/pairwise-sum disagreement, so no
+            # pair-wise Arrow cosine. The 1e-6 margin dwarfs the ~1e-15
+            # relative matmul/pairwise-sum disagreement, so no
             # qualifying pair can be screened out.
             S = (M[s:e] @ M.T) / np.outer(nrm[s:e], nrm)
             rows, cols = np.nonzero(S >= threshold - 1e-6)
@@ -802,30 +795,70 @@ def embedding_neardup_pairs(
                 rows, cols = rows[keep] + s, cols[keep]
                 exact = (M[rows] * M[cols]).sum(axis=1) / (nrm[rows] * nrm[cols])
                 final = exact >= threshold
-                if final.any():
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "id_a": ids[rows[final]],
-                                "id_b": ids[cols[final]],
-                                "cosine": exact[final],
-                            }
-                        )
-                    )
-        if not frames:
-            return empty
-        return pd.concat(frames, ignore_index=True)
+                ra.append(rows[final])
+                rb.append(cols[final])
+                cs.append(exact[final])
+        return ra, rb, cs
 
-    # explicit repartition on the group key: the groupBy reuses this
-    # exact hashpartitioning (no second exchange), and the USER-pinned
-    # partition count is exempt from AQE coalescing — on a small corpus
-    # AQE would otherwise coalesce the tiny shuffle to 1-2 tasks and
-    # serialize the per-group kernel invocations (measured 2.4s at
-    # sf0.1 vs 1.5s at sf1.0 for the SAME 4096 groups)
+    def _verify(batches):
+        """Scores every complete (tbl, bucket) group of each Arrow batch.
+
+        Sorted-partition group contract: the partition arrives
+        hash-partitioned on (tbl, bucket) and sorted by (tbl, bucket,
+        id), so each group is ONE contiguous run of rows in id order
+        and no group spans two partitions. A run may span Arrow
+        batches: the trailing group of every batch is carried into the
+        next one and scored once its end is seen (or at the end of the
+        partition). Memory: one batch plus one carried group."""
+        import pyarrow as pa
+
+        carry = None  # the trailing group seen so far, not yet scored
+        for batch in itertools.chain(batches, [None]):
+            end = batch is None
+            if carry is not None:
+                batch = carry if end else pa.Table.from_batches(
+                    [carry, batch]
+                ).combine_chunks().to_batches()[0]
+            if batch is None or not batch.num_rows:
+                continue
+            tbl, bkt = batch.column(0).to_numpy(), batch.column(1).to_numpy()
+            brk = np.flatnonzero((np.diff(tbl) != 0) | (np.diff(bkt) != 0)) + 1
+            bounds = [0, *brk, batch.num_rows] if end else [0, *brk]
+            carry = batch.slice(bounds[-1])
+            if len(bounds) < 2:
+                continue
+            vs = batch.column(3).slice(0, bounds[-1])
+            M = vs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+            M = M.reshape(len(vs), -1)
+            ra, rb, cs = [], [], []
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                if e - s > 1:
+                    ga, gb, gc = _score_group(M[s:e])
+                    ra += [r + s for r in ga]
+                    rb += [r + s for r in gb]
+                    cs += gc
+            if cs:
+                ids = batch.column(2)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        ids.take(pa.array(np.concatenate(ra))),
+                        ids.take(pa.array(np.concatenate(rb))),
+                        pa.array(np.concatenate(cs), type=pa.float64()),
+                    ],
+                    ["id_a", "id_b", "cosine"],
+                )
+
+    # explicit repartition on the group key, USER-pinned so AQE cannot
+    # coalesce the small shuffle to 1-2 tasks and serialize the kernel
+    # (measured 2.4s at sf0.1 vs 1.5s at sf1.0 for the SAME 4096
+    # groups); the sort makes every group one contiguous id-ordered run
+    # (a NULL id sorts last, so it can only ever be id_b)
     par = df.sparkSession.sparkContext.defaultParallelism
-    pairs = bucketed.repartition(par, "tbl", "bucket").groupBy(
-        "tbl", "bucket"
-    ).applyInPandas(_verify, f"id_a {id_t}, id_b {id_t}, cosine double")
+    pairs = (
+        bucketed.repartition(par, "tbl", "bucket")
+        .sortWithinPartitions("tbl", "bucket", F.col("id").asc_nulls_last())
+        .mapInArrow(_verify, f"id_a {id_t}, id_b {id_t}, cosine double")
+    )
     # a pair sharing buckets in several tables emits bit-identical
     # copies; min() collapses them to the single value
     return pairs.groupBy("id_a", "id_b").agg(F.min("cosine").alias("cosine"))
@@ -1077,25 +1110,25 @@ def decontaminate(
     # them with count 0.
     # synthetic id: the bench side never needed an id column (only its
     # gram SET matters) and callers may pass a text-only frame.
-    # _spread: "small by definition" still means thousands of docs —
+    # spread: "small by definition" still means thousands of docs —
     # on a single-file eval slice the gram kernel otherwise runs its
     # whole tokenize+hash pass on 1-2 tasks while the cluster idles
     # (no-op on multi-split or already-spread inputs; the distinct()
     # shuffles the 8-byte hashes regardless, so the exchange placement
     # of the OUTPUT is unchanged)
     bench_grams = _gram_hash_rows(
-        _spread(bench_df.select(F.col(text_col))).select(
+        spread_small_input(bench_df.select(F.col(text_col))).select(
             F.lit(0).cast("long").alias("__bid"),
             tokens_col(F.col(text_col)).alias("__toks"),
         ),
         "__bid",
         n,
     ).select("gh").distinct()
-    # _spread: the tokenize + gram kernel of the CORPUS side is the
+    # spread: the tokenize + gram kernel of the CORPUS side is the
     # query's dominant per-row work — on a single-small-file input it
     # would run on 1-2 tasks (no-op on real multi-split tables)
     train_grams = _gram_hash_rows(
-        _spread(train_df.select(F.col(id_col), F.col(text_col))).select(
+        spread_small_input(train_df.select(F.col(id_col), F.col(text_col))).select(
             F.col(id_col), tokens_col(F.col(text_col)).alias("__toks")
         ),
         id_col,
@@ -1181,7 +1214,7 @@ def remove_frequent_lines(
     # spread before BOTH phases: the count-agg's explode and the
     # map-side rewrite otherwise run on a single small file's 1-2
     # tasks (no-op on real multi-split tables)
-    df = _spread(df)
+    df = spread_small_input(df)
     if freq is None:
         freq = frequent_lines(df, text_col, sep, min_df)
     out_col = out_col or text_col
@@ -1245,7 +1278,7 @@ def dedup_lines(
         raise ValueError("dedup_lines: out_col may not be 'n_removed'")
     # spread once, shared by the posexplode pass AND the join-back
     # (no-op on real multi-split tables)
-    df = _spread(df)
+    df = spread_small_input(df)
     segs = df.select(
         F.col(id_col).alias("__id"),
         F.posexplode(
@@ -1513,7 +1546,7 @@ def dedup_substrings(
     # small-input parallelization guard (no-op on real multi-split
     # tables): without it the whole fingerprint scan runs on however
     # few tasks a single small file yields
-    df = _spread(df)
+    df = spread_small_input(df)
 
     toks = F.filter(
         F.split(F.col(text_col), r"\s+", -1), lambda x: x != ""

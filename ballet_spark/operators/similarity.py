@@ -204,36 +204,6 @@ def bucket_expr(vec_col: str, planes) -> Column:
     return bucket
 
 
-def _bucket_udf(planes):
-    """All L·b plane projections in ONE numpy float64 matmul per Arrow
-    batch → array of L bucket ids per row. The interpreted per-element
-    Column fold costs ~100× more than BLAS here (L·b·dim lambda steps
-    per row); sign flips vs a sequential-sum engine require |dot| ≲
-    1e-13 of zero against typical |dot| ≈ √dim — negligible."""
-    P = np.asarray(planes, dtype=np.float64)  # (L, b, dim)
-    L, b, dim = P.shape
-    flat = P.reshape(L * b, dim)
-    weights = (1 << np.arange(b)).astype(np.int64)
-
-    def _kernel(vs: pd.Series) -> pd.Series:
-        # NULL embeddings bucket to NULL (row drops out of candidate
-        # generation) instead of np.stack raising on a ragged batch
-        # and killing the job — cosine_udf's own NULL contract
-        mask = vs.notna().to_numpy()
-        if not mask.any():
-            return pd.Series([None] * len(vs), dtype=object)
-        M = np.stack(vs[mask].to_numpy()).astype(np.float64)  # (n, dim)
-        bits = (M @ flat.T > 0).astype(np.int64).reshape(len(M), L, b)
-        buckets = iter(bits @ weights)  # (n, L)
-        # plain list build: pandas masked setitem with a list of
-        # arrays mis-aligns ("cannot assign mismatch length")
-        return pd.Series(
-            [next(buckets) if ok else None for ok in mask], dtype=object
-        )
-
-    return F.pandas_udf(_kernel, "array<long>")
-
-
 def lsh_bucket_tables(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -249,16 +219,57 @@ def lsh_bucket_tables(
     table — miss probability (1 - p^b)^L with p = 1 - θ/π, so recall is
     tunable without growing any single bucket. At larger corpora raise
     ``n_planes`` (≈ log2(n / target_bucket_size)) to keep buckets
-    bounded; candidates stay linear in corpus size."""
+    bounded; candidates stay linear in corpus size.
+
+    One mapInArrow kernel reads the vector column's flat Arrow value
+    buffer, computes all L·b plane projections in ONE float64 matmul
+    per batch and appends the L bucket ids as ``__bks array<bigint>``,
+    which the JVM posexplodes. The interpreted Column fold
+    (:func:`bucket_expr`) costs ~100× more; sign flips vs a
+    sequential-sum engine need |dot| ≲ 1e-13 against typical |dot| ≈
+    √dim — negligible. Input columns pass through with their own
+    types (``array<float>`` stays float). NULL vectors get NULL
+    ``__bks`` and drop out of candidate generation."""
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
     from ballet_spark.cache import spread_small_input
 
     if planes is None:
         planes = srp_planes(dim, n_planes, n_tables, seed)
+    P = np.asarray(planes, dtype=np.float64)  # (L, b, dim)
+    L, b, d = P.shape
+    flat_planes = P.reshape(L * b, d)
+    weights = (1 << np.arange(b)).astype(np.int64)
+    v_idx = df.columns.index(vec_col)
+
+    def kernel(batches):
+        for batch in batches:
+            vecs = batch.column(v_idx)
+            valid = vecs.is_valid().to_numpy(zero_copy_only=False)
+            n = int(valid.sum())
+            # flatten() skips NULL slots and honours slice offsets
+            M = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+            M = M.reshape(n, d)
+            bits = (M @ flat_planes.T > 0).astype(np.int64).reshape(n, L, b)
+            offs = np.zeros(len(valid) + 1, dtype=np.int32)
+            offs[1:] = np.cumsum(valid * L)
+            bks = pa.ListArray.from_arrays(
+                pa.array(offs),
+                pa.array((bits @ weights).ravel(), type=pa.int64()),
+                mask=pa.array(~valid),
+            )
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [bks], batch.schema.names + ["__bks"]
+            )
+
     # single-small-file corpora otherwise run the projection kernel on
     # 1-2 tasks (no-op on real multi-split tables / already-spread input)
     df = spread_small_input(df)
-    bucketed = df.withColumn("__bks", _bucket_udf(planes)(F.col(vec_col)))
-    return bucketed.select(
+    out_schema = StructType(
+        df.schema.fields + [StructField("__bks", ArrayType(LongType()))]
+    )
+    return df.mapInArrow(kernel, out_schema).select(
         *df.columns, F.posexplode("__bks").alias("tbl", "bucket")
     )
 

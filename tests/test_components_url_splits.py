@@ -67,6 +67,30 @@ def test_components_fast_path_matches_distributed_loop(spark):
     }
 
 
+def test_components_fast_path_cap_boundary_and_empty_graph(spark):
+    """The fast path is decided by one collect capped at
+    small_graph_threshold + 1 edges: exactly `threshold` edges stay on
+    the driver, one more takes the distributed loop, with the same
+    result. The driver result is a LocalRelation (no RDD of pickled
+    rows for a later join to scan through a Python worker), and an
+    empty edge set still yields a typed (id, component) frame."""
+    edges = [(1, 2), (2, 3), (9, 7), (8, 7)]
+    at_cap = connected_components(_pairs(spark, edges), small_graph_threshold=4)
+    over = connected_components(_pairs(spark, edges), small_graph_threshold=3)
+    assert sorted(map(tuple, at_cap.collect())) == sorted(map(tuple, over.collect()))
+    plan = at_cap._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    empty = connected_components(
+        spark.createDataFrame([], "id_a string, id_b string")
+    )
+    assert empty.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("id", "string"),
+        ("component", "string"),
+    ]
+
+
 def test_canonical_docs_keeps_min_and_singletons(spark):
     docs = spark.createDataFrame(
         [(i, f"t{i}") for i in range(6)], "doc_id long, text string"

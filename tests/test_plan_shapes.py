@@ -192,6 +192,39 @@ def test_lsh_neardup_join_is_bucket_equikey(spark):
     assert "tbl" in plan and "bucket" in plan
 
 
+def test_lsh_neardup_python_boundary_is_map_in_arrow(spark):
+    """Bucketing and per-bucket verify cross into Python only through
+    mapInArrow: no pandas scalar UDF (ArrowEvalPython) and no grouped
+    pandas apply (FlatMapGroupsInPandas) in the default plan."""
+    from ballet_spark.operators.dedup import embedding_neardup_pairs
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    plan = _plan(embedding_neardup_pairs(emb, threshold=0.9))
+    assert plan.count("MapInArrow") == 2, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
+def test_spread_guard_ignores_column_names(spark):
+    """The spread guard skips its partition probe only for plans with a
+    shuffling NODE; a single-partition frame whose column is named
+    `Join` (or `Sort`) is still a narrow scan and must come back
+    spread across the cluster's cores."""
+    from pyspark.sql import functions as F
+
+    from ballet_spark.cache import spread_small_input
+
+    target = spark.sparkContext.defaultParallelism
+    one = spark.range(0, 10, 1, 1).select(
+        F.col("id").alias("Join"), F.col("id").alias("Sort")
+    )
+    assert one.rdd.getNumPartitions() == 1
+    assert spread_small_input(one).rdd.getNumPartitions() == target
+    # a real shuffle node still skips the probe (and the spread)
+    agg = one.groupBy("Join").count().coalesce(1)
+    assert spread_small_input(agg) is agg
+
+
 def test_bucketed_tables_join_without_exchange(spark, pages_parquet):
     """Two tables bucketed on the join key sort-merge-join with ZERO
     Exchange (the write-once-shuffle-never contract of save_bucketed)."""

@@ -49,6 +49,69 @@ def test_planted_neardup_recall_lsh_default(spark):
     assert (found["cosine"] >= 0.9).all()
 
 
+def _planted_vectors(spark, vec_type):
+    """40 random 16-d vectors, 20 near-copies (cosine ≈ 0.999) and one
+    NULL vector, as (vec_id long, embedding <vec_type>)."""
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((40, 16))
+    near = base[:20] + rng.standard_normal((20, 16)) * 0.02
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
+    rows += [(100 + i, [float(x) for x in v]) for i, v in enumerate(near)]
+    rows.append((999, None))
+    return spark.createDataFrame(rows, f"vec_id long, embedding {vec_type}")
+
+
+def _pair_bits(df):
+    return sorted(
+        (r["id_a"], r["id_b"], float(r["cosine"]).hex()) for r in df.collect()
+    )
+
+
+def test_verify_kernel_groups_spanning_arrow_batches(spark):
+    """The mapInArrow verify sees each partition sorted by (tbl,
+    bucket, id) and carries a batch's trailing group into the next
+    batch. With 3-row Arrow batches nearly every group spans batches;
+    rows and cosine bits must equal the default batch size's, and the
+    pair set must equal the all-pairs exact=True set (planted copies
+    sit far above the threshold, so LSH misses none). A NULL vector
+    yields no pair and no failure; shuffle settings that leave most
+    partitions empty change nothing."""
+    kw = dict(threshold=0.9, dim=16, n_planes=3, n_tables=8)
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    conf = {
+        k: spark.conf.get(k)
+        for k in (batch_key, "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    }
+    try:
+        for vec_type in ("array<float>", "array<double>"):
+            vecs = _planted_vectors(spark, vec_type)
+            default = _pair_bits(embedding_neardup_pairs(vecs, **kw))
+            spark.conf.set(batch_key, "3")
+            small = _pair_bits(embedding_neardup_pairs(vecs, **kw))
+            spark.conf.set(batch_key, conf[batch_key])
+            assert small == default
+            exact = embedding_neardup_pairs(vecs, exact=True, threshold=0.9)
+            assert {(a, b) for a, b, _ in default} == {
+                (r["id_a"], r["id_b"]) for r in exact.collect()
+            }
+            assert {(i, 100 + i) for i in range(20)} <= {(a, b) for a, b, _ in default}
+            assert all(999 not in (a, b) for a, b, _ in default)
+        # at most two (tbl, bucket) groups: two or more of the four
+        # verify partitions and most of the 64 aggregate partitions
+        # are empty
+        spark.conf.set("spark.sql.shuffle.partitions", "64")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        tiny = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.99, 0.01]), (3, None), (4, [-1.0, 0.0])],
+            "vec_id long, embedding array<float>",
+        )
+        out = embedding_neardup_pairs(tiny, threshold=0.9, dim=2, n_planes=1, n_tables=1)
+        assert [(r["id_a"], r["id_b"]) for r in out.collect()] == [(1, 2)]
+    finally:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+
+
 def test_lsh_topk_recall_vs_exact(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 20)
