@@ -54,8 +54,8 @@ def char_count(text: Column) -> Column:
 
 def token_count(text: Column) -> Column:
     """Whitespace tokens; empty/blank ⇒ 0, NULL ⇒ NULL. Phantom ''
-    tokens from leading/trailing newlines/tabs ('hello\\n' → 2 — the
-    pitfall ``dedup.tokens_col`` documents) are prevented by stripping
+    tokens from leading/trailing newlines/tabs ('hello\\n' → 2, because
+    ``F.trim`` strips only spaces) are prevented by stripping
     ALL edge whitespace with a regexp first: a fully-trimmed string
     split on ``\\s+`` cannot produce empty tokens (runs collapse), so
     no post-split filter is needed. Kept as plain codegen-capable
@@ -351,7 +351,8 @@ def gopher_metrics(df, text_col: str = "text", id_cols=("doc_id",)):
     the operator is a pure map and inherits the scan's partitioning,
     so it runs at input-scan speed on any corpus size. Lambdas see
     BOUND array columns (projected first) so the splits run once,
-    not once per element (same pitfall as dedup.ngrams_from_tokens).
+    not once per element: a higher-order-function lambda re-evaluates
+    its argument expressions per element.
     """
     lines = F.split(F.col(text_col), "\n")
     words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")

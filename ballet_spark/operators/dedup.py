@@ -2,21 +2,23 @@
 
 Exact (hash-groupBy), n-gram Jaccard (exact, with doc-frequency
 pruning), MinHash+LSH (band-bucket candidate generation + exact
-verify), SimHash (vectorized pandas UDF), and embedding-cosine
-near-dup. No reference analog (ballet has no dedup); required by the
-task brief as first-class engine components.
+verify), SimHash (vectorized pandas UDF), n-gram decontamination and
+embedding-cosine near-dup. No reference analog (ballet has no dedup).
 
 Scale design notes:
+- one gram kernel: every word-n-gram path (ngram_jaccard_pairs, the
+  MinHash LSH pair paths, minhash_signatures, decontaminate) runs on
+  :func:`gram_hashes`, ONE mapInArrow tokenize+shingle+hash pass that
+  returns per-doc distinct 63-bit gram-hash arrays, plus MinHash
+  signatures when asked. Gram sets are compared as hashes everywhere.
 - exact dedup: one hash aggregation on md5(text) — partial+final agg,
   no row explosion.
 - ngram_jaccard_pairs: candidate pairs = docs sharing ≥1 n-gram after
   **doc-frequency pruning** (grams occurring in > ``max_df`` docs are
   dropped — at 10^12 docs the stopword-gram join would otherwise
   quadratically explode). Exact Jaccard from shared-gram counts.
-- minhash_lsh_pairs: ONE tokenize+shingle+hash pass (Arrow-batched
-  kernel) persisted as per-doc gram-hash arrays; signatures via k
-  seeded affine permutations minimized in one numpy matmul per batch;
-  banded into LSH buckets (JVM exprs); candidates = pairs sharing a
+- minhash_lsh_pairs: the persisted (id, hs, signature) kernel output
+  is banded into LSH buckets (JVM exprs); candidates = pairs sharing a
   band bucket, then exact-verified from the SAME persisted hash arrays.
   Shuffles scale linearly in corpus size, never quadratically.
 
@@ -34,6 +36,8 @@ needed.
 """
 
 from __future__ import annotations
+
+import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -56,6 +60,10 @@ MERSENNE_P = (1 << 31) - 1
 # unboundedly.
 _GRAM_HASH_CACHE: dict = {}
 _GRAM_HASH_CACHE_MAX = 4_000_000
+
+# gram_hashes(jvm_tokens=True): the non-empty tokens of Spark's
+# split(trim(t), '\s+'), whose Java regex \s is [ \t\n\x0B\f\r] only
+_JVM_TOKENS = re.compile(r"[^ \t\n\x0b\f\r]+").findall
 
 
 def _gram_hash_bytes(g: bytes) -> int:
@@ -89,48 +97,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
         )
         .select(id_col, "content_md5", "n_copies")
     )
-
-
-def tokens_col(text_col):
-    """Whitespace tokens of a text column, empties dropped. The filter
-    matters: ``F.trim`` strips only SPACES, so text with leading or
-    trailing newlines/tabs would otherwise yield phantom '' tokens
-    (``split(trim('\\nw1 w2\\n'), '\\s+') = ['', 'w1', 'w2', '']``) —
-    polluting n-gram sets and letting sub-n-word docs clear ``>= n``
-    size guards."""
-    return F.filter(F.split(F.trim(text_col), r"\s+"), lambda x: x != "")
-
-
-def ngrams_from_tokens(toks, n: int = 3):
-    """Distinct word n-grams from an ALREADY-MATERIALIZED token array
-    column. Higher-order-function lambdas are interpreted (no codegen)
-    and re-evaluate their argument expressions per element — so ``toks``
-    must be a bound column, not a ``split()`` expression, or the regex
-    split re-runs once per gram index (measured 10-15× slowdown on the
-    tokenize stage). Callers: project ``tokens_col`` first, then apply
-    this (CollapseProject keeps multi-referenced non-cheap aliases
-    materialized).
-
-    Docs with fewer than ``n`` tokens (including empty text) yield an
-    empty array — without the guard, ``sequence`` would descend and
-    ``slice`` would be called with start <= 0 (INVALID_PARAMETER_VALUE),
-    killing the whole job on the first short document.
-    """
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(n) + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
-def word_ngrams(text_col, n: int = 3):
-    """Distinct word n-grams of a text column (array<string>).
-    Convenience single-expression form; hot paths should project
-    :func:`tokens_col` first and use :func:`ngrams_from_tokens`."""
-    return ngrams_from_tokens(tokens_col(text_col), n)
 
 
 def ngram_jaccard_pairs(
@@ -216,136 +182,73 @@ def _minhash_coefs(num_hashes: int, seed: int):
     ]
 
 
-def _sig_udf(num_hashes: int, seed: int):
-    """Arrow-batched numpy MinHash kernel over per-doc gram-hash arrays:
-    one (g × k) modular affine + min per doc — no explode, no k-way
-    aggregation shuffle; each doc's signature is computed where the doc
-    lives. The 63-bit identity hashes are folded into the Mersenne
-    field HERE (x = h mod p), keeping the wide hash space for set
-    identity while the permutation math stays in the field:
-    a,x < 2^31 ⇒ a*x+b < 2^62, exact in int64."""
-    import numpy as np
-
-    coefs = _minhash_coefs(num_hashes, seed)
-    A = np.array([a for a, _ in coefs], dtype=np.int64)
-    B = np.array([b for _, b in coefs], dtype=np.int64)
-
-    def _kernel(hs: pd.Series) -> pd.Series:
-        def _one(a):
-            h = np.asarray(a, dtype=np.int64) % MERSENNE_P
-            return ((h[:, None] * A[None, :] + B[None, :]) % MERSENNE_P).min(axis=0)
-
-        return hs.map(_one)
-
-    return F.pandas_udf(_kernel, "array<long>")
-
-
 def gram_hashes(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
+    num_hashes: int = 0,
+    seed: int = 42,
+    jvm_tokens: bool = False,
 ) -> DataFrame:
-    """(id, hs) with ``hs`` = one deterministic 63-bit hash per distinct
-    word shingle (the Mersenne-field fold happens only inside the
-    MinHash signature kernel). ONE tokenization pass — reused by
-    signature generation AND candidate verification (Jaccard on the
-    distinct-hash arrays equals gram Jaccard up to 2^-63 collisions).
+    """The gram kernel of every n-gram path in this module: ``(id,
+    hs)`` with ``hs`` = one 63-bit blake2b hash per distinct word
+    ``shingle_n``-gram, plus ``signature`` (``num_hashes`` MinHash
+    values) when ``num_hashes > 0``. Docs with fewer than ``shingle_n``
+    tokens (NULL and empty text included) have no row. Jaccard on the
+    distinct-hash arrays equals gram Jaccard up to 2^-63 collisions.
 
-    mapInArrow, not a pandas UDF (guide §4.2): the output is ~100
-    int64s per doc, and the pandas path boxes every element through a
-    Python list inside a Series before Arrow conversion — at 50k docs
-    / 4.9M gram hashes that boxing dominated the stage. Here the flat
-    value buffer + offsets array are built in numpy and handed to
-    ``pa.ListArray.from_arrays`` zero-copy. Digest values are
-    unchanged (same _gram_hash_bytes memo kernel)."""
+    Tokenizer contract (gram identity depends on it):
+    - ``jvm_tokens=False``: ``str.split()`` (Unicode whitespace). The
+      MinHash paths use it; persisted :class:`LshIndex` gram arrays
+      were built with it.
+    - ``jvm_tokens=True``: the tokens of Spark's
+      ``filter(split(trim(t), '\\s+'), x -> x != '')``. Java regex
+      ``\\s`` is ``[ \\t\\n\\x0B\\f\\r]`` only, so NBSP, ``\\x1c`` or
+      ``\\u3000`` stay inside tokens; :func:`decontaminate` keeps these
+      tokens.
+
+    A gram is its tokens' UTF-8 bytes joined by one space. Signature
+    slot j is ``min((a_j*x + b_j) mod p)`` over the doc's hashes folded
+    into the Mersenne field (x = h mod p), with (a_j, b_j) from
+    :func:`_minhash_coefs`: a, x < 2^31 ⇒ a*x+b < 2^62, exact in int64.
+
+    One mapInArrow pass, not a pandas UDF: the output is ~100 int64s
+    per doc, and the pandas path boxes every element through a Python
+    list inside a Series before Arrow conversion. Here the flat value
+    buffers + offsets are built in numpy and handed to
+    ``pa.ListArray.from_arrays`` zero-copy. A single-split input is
+    spread first (``cache.spread_small_input``) so the kernel does not
+    run on 1-2 tasks."""
     import numpy as np
     import pyarrow as pa
 
     n = int(shingle_n)
+    k = int(num_hashes)
+    split = _JVM_TOKENS if jvm_tokens else str.split
     id_t = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches):
-        gh = _gram_hash_bytes
-        for batch in batches:
-            texts = batch.column(1).to_pylist()
-            per_doc = []
-            offs = np.zeros(len(texts) + 1, dtype=np.int64)
-            total = 0
-            for i, t in enumerate(texts):
-                if t is None:
-                    hs = ()
-                else:
-                    toks = t.split()
-                    if len(toks) < n:
-                        hs = ()
-                    else:
-                        bs = [w.encode("utf-8") for w in toks]
-                        hs = [
-                            gh(g)
-                            for g in {
-                                b" ".join(bs[j : j + n])
-                                for j in range(len(bs) - n + 1)
-                            }
-                        ]
-                per_doc.append(hs)
-                total += len(hs)
-                offs[i + 1] = total
-            flat = np.empty(total, dtype=np.int64)
-            pos = 0
-            for hs in per_doc:
-                ln = len(hs)
-                if ln:
-                    flat[pos : pos + ln] = hs
-                    pos += ln
-            arr = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int32()), pa.array(flat, type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays([batch.column(0), arr], ["id", "hs"])
-
-    out = spread_small_input(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    ).mapInArrow(kernel, f"id {id_t}, hs array<bigint>")
-    return out.filter(F.size("hs") > 0)
-
-
-def _gram_hash_sig(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    num_hashes: int,
-    seed: int,
-) -> DataFrame:
-    """(id, hs, signature) in ONE mapInArrow pass — the gram_hashes
-    kernel with the MinHash affine-min fused in, so the LSH pair paths
-    pay one Python stage instead of two (the separate signature pass
-    re-shipped every persisted gram array through Arrow). Gram digests
-    and signature values are identical to gram_hashes + _sig_udf: the
-    same _gram_hash_bytes memo and the same int64 field arithmetic on
-    the same per-doc hash lists."""
-    import numpy as np
-    import pyarrow as pa
-
-    n = int(shingle_n)
-    id_t = df.schema[id_col].dataType.simpleString()
-    coefs = _minhash_coefs(num_hashes, seed)
+    coefs = _minhash_coefs(k, seed)
     A = np.array([a for a, _ in coefs], dtype=np.int64)
     B = np.array([b for _, b in coefs], dtype=np.int64)
 
+    def _lists(offsets, values):
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, type=pa.int32()), pa.array(values, type=pa.int64())
+        )
+
     def kernel(batches):
         gh = _gram_hash_bytes
         for batch in batches:
             texts = batch.column(1).to_pylist()
             per_doc = []
             offs = np.zeros(len(texts) + 1, dtype=np.int64)
-            sig_flat = np.empty(len(texts) * num_hashes, dtype=np.int64)
+            sig_flat = np.zeros(len(texts) * k, dtype=np.int64)
             total = 0
             for i, t in enumerate(texts):
                 if t is None:
                     hs = ()
                 else:
-                    toks = t.split()
+                    toks = split(t)
                     if len(toks) < n:
                         hs = ()
                     else:
@@ -360,13 +263,11 @@ def _gram_hash_sig(
                 per_doc.append(hs)
                 total += len(hs)
                 offs[i + 1] = total
-                if hs:
+                if k and hs:
                     h = np.asarray(hs, dtype=np.int64) % MERSENNE_P
-                    sig_flat[i * num_hashes : (i + 1) * num_hashes] = (
+                    sig_flat[i * k : (i + 1) * k] = (
                         (h[:, None] * A[None, :] + B[None, :]) % MERSENNE_P
                     ).min(axis=0)
-                else:
-                    sig_flat[i * num_hashes : (i + 1) * num_hashes] = 0
             flat = np.empty(total, dtype=np.int64)
             pos = 0
             for hs in per_doc:
@@ -374,82 +275,16 @@ def _gram_hash_sig(
                 if ln:
                     flat[pos : pos + ln] = hs
                     pos += ln
-            hs_arr = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int32()), pa.array(flat, type=pa.int64())
-            )
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(len(texts) + 1, dtype=np.int64) * num_hashes,
-                    type=pa.int32(),
-                ),
-                pa.array(sig_flat, type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), hs_arr, sig_arr], ["id", "hs", "signature"]
-            )
+            cols = [batch.column(0), _lists(offs, flat)]
+            if k:
+                cols.append(_lists(np.arange(len(texts) + 1) * k, sig_flat))
+            yield pa.RecordBatch.from_arrays(cols, ["id", "hs", "signature"][: len(cols)])
 
+    schema = f"id {id_t}, hs array<bigint>" + (", signature array<bigint>" if k else "")
     out = spread_small_input(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    ).mapInArrow(
-        kernel, f"id {id_t}, hs array<bigint>, signature array<bigint>"
-    )
-    # gram-less docs are excluded exactly as gram_hashes excludes them
-    # (their placeholder signature rows never existed in the old path)
+    ).mapInArrow(kernel, schema)
     return out.filter(F.size("hs") > 0)
-
-
-def _gram_hash_rows(df: DataFrame, id_col: str, n: int) -> DataFrame:
-    """Exploded (id, gh) rows — one per DISTINCT word ``n``-gram of the
-    pre-tokenized ``__toks`` array column — in one mapInArrow pass.
-    Tokens come from the caller's JVM ``tokens_col`` projection (NOT
-    re-tokenized in Python), so gram CONTENT is exactly the HOF
-    formulation's; only the 63-bit blake2b identity replaces per-gram
-    interpreted ``slice``+``concat_ws`` (measured ~15µs/element of HOF
-    interpretation) + ``xxhash64``. Set membership is equivalent up to
-    ~2^-63 collisions — the same argument the docstring of
-    :func:`decontaminate` already makes for hashing grams at all.
-    Docs with fewer than ``n`` tokens emit no rows (plain-explode
-    semantics)."""
-    import numpy as np
-    import pyarrow as pa
-
-    id_t = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches):
-        gh = _gram_hash_bytes
-        for batch in batches:
-            ids = batch.column(0)
-            tok_lists = batch.column(1).to_pylist()
-            counts = np.zeros(len(tok_lists), dtype=np.int64)
-            flat_parts = []
-            for i, tk in enumerate(tok_lists):
-                if tk is None or len(tk) < n:
-                    continue
-                bs = [w.encode("utf-8") for w in tk]
-                hs = [
-                    gh(g)
-                    for g in {
-                        b" ".join(bs[j : j + n]) for j in range(len(bs) - n + 1)
-                    }
-                ]
-                counts[i] = len(hs)
-                flat_parts.append(hs)
-            flat = np.empty(int(counts.sum()), dtype=np.int64)
-            pos = 0
-            for hs in flat_parts:
-                flat[pos : pos + len(hs)] = hs
-                pos += len(hs)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(np.repeat(np.arange(len(counts)), counts))),
-                    pa.array(flat, type=pa.int64()),
-                ],
-                ["id", "gh"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), F.col("__toks")).mapInArrow(
-        kernel, f"id {id_t}, gh bigint"
-    )
 
 
 def minhash_signatures(
@@ -460,11 +295,12 @@ def minhash_signatures(
     shingle_n: int = 3,
     seed: int = 42,
 ) -> DataFrame:
-    """MinHash signature per document (same affine-permutation math as
-    the round-1 explode+agg formulation — identical signatures — but
-    computed by the vectorized numpy kernel with zero shuffle)."""
-    hs = gram_hashes(df, id_col, text_col, shingle_n)
-    return hs.select("id", _sig_udf(num_hashes, seed)(F.col("hs")).alias("signature"))
+    """(id, signature): the MinHash signature per document, computed
+    where the doc lives by the :func:`gram_hashes` kernel (no shuffle).
+    Docs with fewer than ``shingle_n`` tokens have no row."""
+    return gram_hashes(
+        df, id_col, text_col, shingle_n, num_hashes, seed
+    ).select("id", "signature")
 
 
 # Identity of the band-bucket hash recipe. Stamped onto persisted LSH
@@ -511,13 +347,62 @@ def _banded_buckets(sig: DataFrame, bands: int, r: int) -> DataFrame:
     ).select("id", "bb.band", "bb.bucket")
 
 
-def _jaccard_expr():
-    """Exact Jaccard from two gram-hash array columns ``ha``/``hb``."""
-    inter = F.size(F.array_intersect("ha", "hb"))
+def _lsh_build(df, id_col, text_col, num_hashes, bands, shingle_n, seed):
+    """Eager-persisted ``(hs, banded)`` of one MinHash LSH build: the
+    (id, hs, signature) kernel output, and its (id, band, bucket) rows.
+
+    ONE tokenization+signature pass feeds banding AND candidate verify,
+    so gram arrays never make a second Arrow round-trip. Both persists
+    are EAGER: the band self-join and the verify reference them several
+    times, and a lazy cache inside one job lets the join sides race
+    past it cold, recomputing the whole signature DAG per side."""
+    if num_hashes % bands:
+        raise ValueError("bands must divide num_hashes")
+    hs = persist_tracked(
+        gram_hashes(df, id_col, text_col, shingle_n, num_hashes, seed)
+    )
+    hs.count()
+    banded = persist_tracked(
+        _banded_buckets(hs.select("id", "signature"), bands, num_hashes // bands)
+    )
+    banded.count()
+    return hs, banded
+
+
+def _band_self_join(banded: DataFrame) -> DataFrame:
+    """Distinct (id_a, id_b) candidates, id_a < id_b, sharing any band
+    bucket: an equi-join on (band, bucket), linear shuffles."""
+    a, b = banded.alias("a"), banded.alias("b")
     return (
-        inter.cast("double")
-        / (F.size("ha") + F.size("hb") - inter).cast("double")
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+
+
+def _jaccard_verify(cand, grams_a, grams_b, threshold, *extra):
+    """Candidate (id_a, id_b) pairs with exact Jaccard ≥ ``threshold``,
+    scored from the PERSISTED (id, hs) gram-hash arrays (int64
+    intersection, no re-tokenization; hash arrays ship ~6x fewer bytes
+    than gram strings): O(|candidates|·|grams|), never the all-pairs
+    gram self-join. ``extra`` columns are appended to each row."""
+    ha = grams_a.select(F.col("id").alias("id_a"), F.col("hs").alias("ha"))
+    hb = grams_b.select(F.col("id").alias("id_b"), F.col("hs").alias("hb"))
+    inter = F.size(F.array_intersect("ha", "hb"))
+    jaccard = (
+        inter.cast("double") / (F.size("ha") + F.size("hb") - inter).cast("double")
     ).alias("jaccard")
+    return (
+        cand.join(ha, "id_a")
+        .join(hb, "id_b")
+        .select("id_a", "id_b", jaccard, *extra)
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def minhash_lsh_pairs(
@@ -538,51 +423,13 @@ def minhash_lsh_pairs(
     with exact n-gram Jaccard when ``verify_exact`` (recommended — LSH
     alone has false positives; verification also bounds false negatives
     to genuinely-unbucketed pairs)."""
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    r = num_hashes // bands
-    # ONE tokenization+signature pass (fused kernel): the persisted
-    # (id, hs, signature) frame feeds banding AND candidate
-    # verification, so the shingle build runs once and the gram arrays
-    # never make a second Arrow round-trip for the signature stage
-    hs = persist_tracked(
-        _gram_hash_sig(df, id_col, text_col, shingle_n, num_hashes, seed)
+    hs, banded = _lsh_build(
+        df, id_col, text_col, num_hashes, bands, shingle_n, seed
     )
-    hs.count()
-    banded = _banded_buckets(hs.select("id", "signature"), bands, r)
-
-    # persist EAGERLY: the self-join would otherwise recompute the whole
-    # signature DAG (explode + 64 min-aggs) once per side — lazy persist
-    # inside one job lets both sides race past the cold cache
-    banded = persist_tracked(banded)
-    banded.count()
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = _band_self_join(banded)
     if not verify_exact:
         return cand
-
-    # Verify ONLY the candidate pairs, from the PERSISTED gram-hash
-    # arrays (int64 intersection — no re-tokenization, and hash arrays
-    # ship ~6× fewer bytes than the gram strings):
-    # O(|candidates|·|grams|), never the all-pairs gram self-join.
-    ha = hs.select(F.col("id").alias("id_a"), F.col("hs").alias("ha"))
-    hb = hs.select(F.col("id").alias("id_b"), F.col("hs").alias("hb"))
-    verified = (
-        cand.join(ha, "id_a")
-        .join(hb, "id_b")
-        .select("id_a", "id_b", _jaccard_expr())
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified
+    return _jaccard_verify(cand, hs, hs, threshold)
 
 
 def simhash_pdf(text: pd.Series, bits: int = 64) -> pd.Series:
@@ -896,40 +743,15 @@ def minhash_lsh_pairs_incremental(
     carries only (id, band, bucket) — gram arrays live once per doc in
     the separate grams table and ship only for verified candidates;
     every join is a bucket equi-join (linear), never all-pairs. The
-    banding math is the SAME helper the one-shot path uses
-    (:func:`_banded_buckets`), so a pair split across a snapshot
+    build, band join and verify are the SAME helpers the one-shot
+    path uses (:func:`_lsh_build`), so a pair split across a snapshot
     boundary is found iff the one-shot batch job would have found it
     (pytest proves the equivalence)."""
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    r = num_hashes // bands
-    hs = persist_tracked(
-        _gram_hash_sig(new_df, id_col, text_col, shingle_n, num_hashes, seed)
+    hs, banded = _lsh_build(
+        new_df, id_col, text_col, num_hashes, bands, shingle_n, seed
     )
-    hs.count()
-    banded = persist_tracked(
-        _banded_buckets(hs.select("id", "signature"), bands, r)
-    )
-    banded.count()
-
-    # new×new within the batch
-    a, b = banded.alias("a"), banded.alias("b")
-    nn = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    ha = hs.select(F.col("id").alias("id_a"), F.col("hs").alias("ha"))
-    hb = hs.select(F.col("id").alias("id_b"), F.col("hs").alias("hb"))
-    nn_pairs = (
-        nn.join(ha, "id_a").join(hb, "id_b")
-        .select("id_a", "id_b", _jaccard_expr(), F.lit("new").alias("vs"))
-        .filter(F.col("jaccard") >= threshold)
+    nn_pairs = _jaccard_verify(
+        _band_self_join(banded), hs, hs, threshold, F.lit("new").alias("vs")
     )
 
     # new×index across the snapshot boundary: only the compact bucket
@@ -944,11 +766,8 @@ def minhash_lsh_pairs_incremental(
         .select("id_a", "id_b")
         .distinct()
     )
-    ihs = index.grams.select(F.col("id").alias("id_b"), F.col("hs").alias("hb"))
-    ni_pairs = (
-        ni.join(ha, "id_a").join(ihs, "id_b")
-        .select("id_a", "id_b", _jaccard_expr(), F.lit("index").alias("vs"))
-        .filter(F.col("jaccard") >= threshold)
+    ni_pairs = _jaccard_verify(
+        ni, hs, index.grams, threshold, F.lit("index").alias("vs")
     )
 
     delta = LshIndex(buckets=banded, grams=hs.select("id", "hs"))
@@ -1080,13 +899,16 @@ def decontaminate(
     are thousands of docs, the corpus is 10^12), so its DISTINCT gram
     set broadcasts and the training side joins map-side — the corpus
     shuffles nothing. The join and the per-doc hit counting run on
-    63-bit blake2b GRAM HASHES (the shared :func:`_gram_hash_rows`
-    kernel), not gram strings: an exploded corpus carries 10^13
-    multi-word strings, and hashing cuts the broadcast table and every
-    exchanged row to 8 bytes (same trick as
-    :func:`ngram_jaccard_pairs`; a ~2^-63 collision flags one doc
-    spuriously, it never misses real contamination). Per-doc distinct
-    grams keep counts identical to the string join.
+    63-bit blake2b GRAM HASHES from :func:`gram_hashes`, not gram
+    strings: an exploded corpus carries 10^13 multi-word strings, and
+    hashing cuts the broadcast table and every exchanged row to 8 bytes
+    (same trick as :func:`ngram_jaccard_pairs`; a ~2^-63 collision
+    flags one doc spuriously, it never misses real contamination).
+    Per-doc distinct grams keep counts identical to the string join.
+
+    Tokens are Spark's ``filter(split(trim(t), '\\s+'), x -> x != '')``
+    (``jvm_tokens=True``): split on ``[ \\t\\n\\x0B\\f\\r]`` runs, empty
+    tokens dropped, so NBSP or ``\\u3000`` never split a word.
 
     Returns ``train_df`` + ``n_contaminated_grams`` (long) +
     ``contaminated`` (boolean). Docs shorter than ``n`` words have 0 /
@@ -1099,41 +921,21 @@ def decontaminate(
             # benchmark: the left join would otherwise produce an
             # ambiguous duplicate column / silent overwrite
             raise ValueError(f"decontaminate reserves column name {c!r}")
-    # Gram identity = 63-bit blake2b of the gram bytes via
-    # _gram_hash_rows (r6): the HOF ngrams_from_tokens formulation
-    # interpreted slice+concat_ws once per gram index (~15µs/element,
-    # the whole query's cost at corpus scale); the kernel emits the
-    # exploded hash rows directly from the SAME JVM-tokenized arrays.
-    # Tokens still come from tokens_col so gram content is unchanged.
-    # Docs shorter than n words emit no probe row (plain-explode
-    # semantics as before); the final left join + coalesce(0) restores
-    # them with count 0.
-    # synthetic id: the bench side never needed an id column (only its
-    # gram SET matters) and callers may pass a text-only frame.
-    # spread: "small by definition" still means thousands of docs —
-    # on a single-file eval slice the gram kernel otherwise runs its
-    # whole tokenize+hash pass on 1-2 tasks while the cluster idles
-    # (no-op on multi-split or already-spread inputs; the distinct()
-    # shuffles the 8-byte hashes regardless, so the exchange placement
-    # of the OUTPUT is unchanged)
-    bench_grams = _gram_hash_rows(
-        spread_small_input(bench_df.select(F.col(text_col))).select(
-            F.lit(0).cast("long").alias("__bid"),
-            tokens_col(F.col(text_col)).alias("__toks"),
-        ),
-        "__bid",
-        n,
-    ).select("gh").distinct()
-    # spread: the tokenize + gram kernel of the CORPUS side is the
-    # query's dominant per-row work — on a single-small-file input it
-    # would run on 1-2 tasks (no-op on real multi-split tables)
-    train_grams = _gram_hash_rows(
-        spread_small_input(train_df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col), tokens_col(F.col(text_col)).alias("__toks")
-        ),
-        id_col,
-        n,
-    ).withColumnRenamed("id", id_col)
+    # Both sides go through the one gram kernel (which spreads a
+    # single-split input: the tokenize+hash pass is the query's
+    # dominant per-row work and would otherwise run on 1-2 tasks) and
+    # explode its per-doc hash arrays in the JVM. Docs shorter than n
+    # words have no kernel row; the final left join + coalesce(0)
+    # restores them with count 0. The bench side gets a constant
+    # synthetic id: only its gram SET matters, and callers may pass a
+    # text-only frame.
+    bench_grams = gram_hashes(
+        bench_df.select(F.lit(0).cast("long").alias("__bid"), F.col(text_col)),
+        "__bid", text_col, n, jvm_tokens=True,
+    ).select(F.explode("hs").alias("gh")).distinct()
+    train_grams = gram_hashes(
+        train_df, id_col, text_col, n, jvm_tokens=True
+    ).select(F.col("id").alias(id_col), F.explode("hs").alias("gh"))
     hits = (
         train_grams.join(F.broadcast(bench_grams), "gh", "inner")
         .groupBy(id_col)

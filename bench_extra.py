@@ -9,8 +9,9 @@ Usage:
     python bench_extra.py q1_pricing_summary minhash_lsh_dups ...
     python bench_extra.py --explain-dir plans/r06 --suffix before q ...
     python bench_extra.py --all            # every headline query
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0),
-     SPARK_GRAFT_CPUS (default 32), BENCH_EXTRA_REPS (default 3).
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1, the bench's
+     scale), SPARK_GRAFT_CPUS (default: this machine's core count,
+     ``os.cpu_count()``), BENCH_EXTRA_REPS (default 3).
 """
 
 from __future__ import annotations
@@ -67,8 +68,8 @@ def main():
     import __spark_entry__ as entry
     import bench
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     reps = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
     spark = get_spark(app_name="bench_extra", master=f"local[{cpus}]")
     bench.warmup_workers(spark)

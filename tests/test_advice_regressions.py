@@ -2,6 +2,8 @@
 NULL-keyed skew split / Groupwise, Trend with NULLs in the window, and
 duplication-sensitive materialization digests."""
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -9,9 +11,9 @@ from pyspark.sql import functions as F
 
 from ballet_spark.core import Feature, PipelineContext
 from ballet_spark.operators.dedup import (
+    gram_hashes,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    word_ngrams,
 )
 from ballet_spark.operators.fitted import Groupwise, SimpleImputer
 from ballet_spark.operators.window_ops import Trend
@@ -24,13 +26,16 @@ def test_word_ngrams_short_and_empty_docs(spark):
          (5, None)],
         "doc_id long, text string",
     )
-    out = df.select("doc_id", word_ngrams(F.col("text"), 3).alias("g")).collect()
-    by_id = {r["doc_id"]: r["g"] for r in out}
-    assert by_id[1] == ["one two three", "two three four"]
-    assert by_id[2] == []
-    assert by_id[3] == []
-    assert by_id[4] == []
-    assert by_id[5] == []  # NULL text routes to the empty-array branch
+    out = gram_hashes(df, shingle_n=3).collect()
+    by_id = {r["id"]: sorted(r["hs"]) for r in out}
+
+    def blake63(g: str) -> int:
+        d = hashlib.blake2b(g.encode("utf-8"), digest_size=8).digest()
+        return int.from_bytes(d, "big") & ((1 << 63) - 1)
+
+    # doc 1 has exactly its two 3-grams; docs shorter than 3 tokens,
+    # empty text and NULL text (2-5) have no row
+    assert by_id == {1: sorted(blake63(g) for g in ("one two three", "two three four"))}
     # the full dedup jobs must survive short/empty docs end-to-end
     assert ngram_jaccard_pairs(df, threshold=0.1).count() >= 0
     assert minhash_lsh_pairs(df, num_hashes=8, bands=4, threshold=0.1).count() >= 0

@@ -205,6 +205,18 @@ def test_lsh_neardup_python_boundary_is_map_in_arrow(spark):
     assert "ArrowEvalPython" not in plan, plan
 
 
+def test_minhash_signatures_is_one_map_in_arrow(spark):
+    """Gram hashing and the MinHash affine-min run in ONE mapInArrow
+    kernel pass: no pandas scalar UDF (ArrowEvalPython) on the
+    signature path."""
+    from ballet_spark.operators.dedup import minhash_signatures
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    plan = _plan(minhash_signatures(docs, num_hashes=16))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
 def test_spread_guard_ignores_column_names(spark):
     """The spread guard skips its partition probe only for plans with a
     shuffling NODE; a single-partition frame whose column is named
@@ -405,6 +417,10 @@ def test_decontaminate_query_broadcasts_and_never_sorts_corpus(spark):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+    # both sides tokenize inside the one gram kernel: no interpreted
+    # higher-order-function tokenizer in the JVM
+    assert plan.count("MapInArrow") == 2, plan
+    assert "lambdafunction" not in plan, plan
 
 
 def test_pii_and_segment_removal_are_shuffle_free_maps(spark):

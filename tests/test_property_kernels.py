@@ -128,3 +128,129 @@ def test_pii_redaction_kernels(spark):
         assert tok in r5["red"]
     assert out[6]["red"] == rows[5][1]  # untouched
     assert out[7]["red"] is None  # NULL propagates
+
+
+def _blake63(g: str) -> int:
+    d = hashlib.blake2b(g.encode("utf-8"), digest_size=8).digest()
+    return int.from_bytes(d, "big") & ((1 << 63) - 1)
+
+
+def _gram_hash_reference(t, n: int):
+    """Sorted distinct 63-bit blake2b hashes of the word n-grams of
+    ``str.split()`` tokens; None for docs with fewer than n tokens."""
+    toks = [] if t is None else t.split()
+    if len(toks) < n:
+        return None
+    return sorted({_blake63(" ".join(toks[j : j + n])) for j in range(len(toks) - n + 1)})
+
+
+def test_gram_hashes_and_signatures_match_python_reference(spark):
+    """Pins gram-hash and MinHash signature VALUES (persisted LSH
+    indexes depend on them) against a per-doc Python loop, with
+    3-record Arrow batches so every partition spans several batches."""
+    from ballet_spark.operators.dedup import (
+        MERSENNE_P,
+        _minhash_coefs,
+        gram_hashes,
+        minhash_signatures,
+    )
+
+    base = [
+        None, "", "solo", "one two", "one two three",
+        "a b c a b c a b c",  # repeated grams
+        "café naïve résumé café naïve résumé",
+        "日本 語 の テキスト です",
+        "emoji 🙂 and 🙂 again",
+        "tab\tand\nnewline  runs\xa0nbsp　ideographic space",
+        "the quick brown fox jumps over the lazy dog",
+    ]
+    docs = [f"{t} v{i // len(base)}" if i >= len(base) and t else t
+            for i, t in enumerate(base * 3)]
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        for n in (2, 3):
+            got = {r.id: sorted(r.hs) for r in gram_hashes(df, shingle_n=n).collect()}
+            want = {
+                i: hs for i, t in enumerate(docs)
+                if (hs := _gram_hash_reference(t, n)) is not None
+            }
+            assert got == want
+        for k, seed in ((8, 42), (64, 7)):
+            coefs = _minhash_coefs(k, seed)
+            sigs = minhash_signatures(df, num_hashes=k, seed=seed).collect()
+            want = {
+                i: [min(((h % MERSENNE_P) * a + b) % MERSENNE_P for h in hs)
+                    for a, b in coefs]
+                for i, t in enumerate(docs)
+                if (hs := _gram_hash_reference(t, 3)) is not None
+            }
+            assert {r.id: list(r.signature) for r in sigs} == want
+    finally:
+        spark.conf.set(conf, old)
+
+
+# Java regex \s is [ \t\n\x0B\f\r]; the rest are whitespace to Python's
+# str.split() but part of a token to Spark's split
+exotic_texts = st.text(
+    alphabet=st.sampled_from(["a", "b", " ", "\t", "\n", "\x0b", "\f", "\r",
+                              "\xa0", "\x1c", "\x85", "　"]),
+    max_size=24,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(exotic_texts, min_size=1, max_size=40))
+def test_decontaminate_tokens_are_jvm_split_tokens(spark, docs):
+    """decontaminate tokenizes like
+    ``filter(split(trim(t), '\\s+'), x -> x != '')``. Every JVM token
+    becomes a one-token bench doc, so at n=1 each doc's hit count is
+    its distinct JVM token count only if the gram kernel splits both
+    sides exactly as the JVM does (a token split apart, or two tokens
+    kept together, changes the count)."""
+    from pyspark.sql import functions as F
+
+    from ballet_spark.operators.dedup import decontaminate
+
+    train = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    toks = F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != "")
+    bench = train.select(F.explode(toks).alias("text"))
+    rows = decontaminate(train, bench, n=1).select(
+        "doc_id", "n_contaminated_grams", F.size(F.array_distinct(toks)).alias("want")
+    ).collect()
+    assert len(rows) == len(docs)
+    assert [(r.doc_id, r.n_contaminated_grams) for r in sorted(rows)] == [
+        (r.doc_id, r.want) for r in sorted(rows)
+    ]
+
+
+def test_decontaminate_exotic_whitespace_counts(spark):
+    """n=2 hit counts on docs mixing Java-whitespace ([ \\t\\n\\x0B\\f\\r])
+    and characters only Python treats as whitespace (NBSP, \\x1c,
+    \\x85, U+3000), which stay inside tokens."""
+    from ballet_spark.operators.dedup import decontaminate
+
+    bench = spark.createDataFrame(
+        [(100, "a\xa0b c d"), (101, "x\x1cy z"), (102, "p　q r")],
+        "doc_id long, text string",
+    )
+    train = spark.createDataFrame(
+        [
+            (1, "a\xa0b c d"),  # "a\xa0b c", "c d"
+            (2, "a b c d"),  # "c d"
+            (3, "x\x1cy\tz"),  # "x\x1cy z"
+            (4, "x y z"),  # none: "x\x1cy" is one token
+            (5, "p　q\x0br"),  # "p　q r"
+            (6, "\x85c d\x85"),  # none: tokens "\x85c", "d\x85"
+            (7, "\x0bc\fd\r"),  # "c d"
+            (8, None), (9, ""), (10, "c"),
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        r.doc_id: r.n_contaminated_grams
+        for r in decontaminate(train, bench, n=2).collect()
+    }
+    assert got == {1: 2, 2: 1, 3: 1, 4: 0, 5: 1, 6: 0, 7: 1, 8: 0, 9: 0, 10: 0}
