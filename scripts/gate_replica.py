@@ -79,7 +79,6 @@ def main() -> int:
         )
     spark = get_spark(
         app_name="gate_replica",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=16,
         extra_conf={"spark.driver.memory": "16g"},
     )

@@ -168,10 +168,7 @@ def main():
     k = int(pos[1]) if len(pos) > 1 else 6
     reps = int(pos[2]) if len(pos) > 2 else 3
     bucketed = "--bucketed" in sys.argv
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="incremental_index_stress", master=f"local[{cpus}]"
-    )
+    spark = get_spark(app_name="incremental_index_stress")
     # worker warmup (pandas UDF import storm must not land in step 0)
     make_batch(spark, 512, 999).count()
     minhash_lsh_pairs_incremental(

@@ -74,8 +74,7 @@ def sink(df):
 def main():
     hot_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="salted_window_stress", master=f"local[{cpus}]")
+    spark = get_spark(app_name="salted_window_stress")
     df = fixture(spark, hot_rows)
     head = ["https://hot.example/"]
 
@@ -101,7 +100,7 @@ def main():
     out = {
         "hot_rows": hot_rows,
         "total_rows": 2 * hot_rows,
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
         "plain_sec": round(min(t_plain), 3),
         "salted_sec": round(min(t_salted), 3),
         "speedup": round(min(t_plain) / min(t_salted), 2),

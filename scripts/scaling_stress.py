@@ -1,10 +1,11 @@
 """Operator linear-scaling stress (BENCH/BASELINE.md protocol).
 
 Runs the same operator job at 1× (200k pages) and 3.34× (668k pages)
-synthetic webtext on local[32] and reports the wall-time ratio — an
-operator whose time ratio stays at-or-below the data ratio has no
-superlinear term (no quadratic join, no second shuffle that grows with
-data^2), which is the property that survives a 100 TB scale-up.
+synthetic webtext on local[$SPARK_GRAFT_CPUS] (local[*] when unset) and
+reports the wall-time ratio — an operator whose time ratio stays
+at-or-below the data ratio has no superlinear term (no quadratic join,
+no second shuffle that grows with data^2), which is the property that
+survives a 100 TB scale-up.
 
 Round-2 covered MinHash signatures / exact dedup / hash split / TF-IDF;
 round-3 added the skew-split as-of join and connected components
@@ -229,7 +230,8 @@ def main() -> None:
             raise SystemExit(f"unknown jobs {unknown}; have {sorted(JOBS)}")
         jobs = {n: JOBS[n] for n in names}
 
-    spark = get_spark(app_name="scaling_stress", master="local[32]")
+    spark = get_spark(app_name="scaling_stress")
+    master = spark.sparkContext.master
     bench.warmup_workers(spark)
     paths = {}
     for level, n_pages in LEVELS.items():
@@ -269,7 +271,7 @@ def main() -> None:
                 f"({time.strftime('%Y-%m-%d')})\n\n"
                 "Same jobs at 1× (200k pages / 809k docs) and 3.34× (668k pages /\n"
                 "2.7M docs) webtext,\n"
-                "local[32], best-of-%d per level (protocol above):\n\n" % reps
+                f"{master}, best-of-{reps} per level (protocol above):\n\n"
                 + "| operator | 1× sec | 3.34× sec | time ratio (linear = 3.34) |\n"
                 "|---|---|---|---|\n"
                 + "".join(

@@ -822,16 +822,6 @@ def test_materialize_old_layout_out_path_raises_migration_error(
         )
 
 
-def test_decode_jpeg_trailing_fill_bytes_value_error():
-    """ADVICE r5: a stream ending in 0xFF fill bytes raised IndexError
-    from the marker peek instead of the decoder's contractual
-    ValueError."""
-    from ballet_spark.functions.jpeg import decode_jpeg
-
-    with pytest.raises(ValueError, match="truncated JPEG"):
-        decode_jpeg(b"\xff\xd8\xff\xff\xff")
-
-
 def test_incremental_dedup_seeded_from_exact_dedup_null_text(spark):
     """ADVICE r5: exact_dedup's oracle-pinned output keys NULL text as
     content_md5 NULL while the incremental path keys it '' — seeding
@@ -922,17 +912,6 @@ def test_load_lsh_index_unstamped_is_an_interrupted_save(spark):
     finally:
         for t in ("unstamped_test_buckets", "unstamped_test_grams"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_decode_jpeg_truncated_segment_header_value_error():
-    from ballet_spark.functions.jpeg import decode_jpeg
-
-    # marker 0xDB then a 1-byte remainder: length header truncated
-    with pytest.raises(ValueError, match="truncated JPEG"):
-        decode_jpeg(b"\xff\xd8\xff\xdb\x00")
-    # full header but body runs past EOF
-    with pytest.raises(ValueError, match="truncated JPEG"):
-        decode_jpeg(b"\xff\xd8\xff\xdb\x00\x43\x00")
 
 
 def test_materialize_fully_done_old_layout_stays_noop(

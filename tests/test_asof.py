@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ballet_spark.operators.asof import asof_join, asof_join_broadcast
@@ -156,3 +157,80 @@ def test_asof_strategies_agree_on_random_adversarial_inputs(spark):
             rb = sorted(map(tuple, b.collect()))
             # broadcast path can't match NULL-keyed probes; none here
             assert ra == rb, (trial, tol)
+
+
+def _ts(df, *cols):
+    for c in cols:
+        df = df.withColumn(c, F.timestamp_seconds(F.col(c)))
+    return df
+
+
+def test_asof_null_in_matched_row_stays_null(spark):
+    """The matched (latest) right row's NULL value must NOT be
+    backfilled from an older right row — merge_asof takes the matched
+    row as-is, on BOTH strategies."""
+    right = _ts(
+        spark.createDataFrame(
+            [("e", 1.0, 10.0), ("e", 5.0, None)], "url string, rts double, v double"
+        ),
+        "rts",
+    )
+    left = _ts(spark.createDataFrame([("e", 6.0)], "url string, ts double"), "ts")
+    for fn in (asof_join, asof_join_broadcast):
+        row = fn(left, right, on="url", left_ts="ts", right_ts="rts").first()
+        assert row["v"] is None, fn.__name__
+        assert row["__matched_ts"] is not None
+    # and with tolerance 2s the (out-of-tolerance-at-t=1) older value
+    # must not reappear either
+    row = asof_join(
+        left, right, on="url", left_ts="ts", right_ts="rts", tolerance_s=2
+    ).first()
+    assert row["v"] is None
+
+
+def test_asof_tie_deterministic_and_paths_agree(spark):
+    """Equal-timestamp right rows resolve identically (max value
+    tuple) on the window and broadcast paths."""
+    right = _ts(
+        spark.createDataFrame(
+            [("e", 3.0, 1.0), ("e", 3.0, 2.0)], "url string, rts double, v double"
+        ),
+        "rts",
+    ).repartition(4)
+    left = _ts(spark.createDataFrame([("e", 3.0)], "url string, ts double"), "ts")
+    a = asof_join(left, right, on="url", left_ts="ts", right_ts="rts").first()
+    b = asof_join_broadcast(left, right, on="url", left_ts="ts", right_ts="rts").first()
+    assert a["v"] == b["v"] == 2.0
+
+
+def test_asof_mixed_ts_types_order_chronologically(spark):
+    """timestamp probe vs ISO-string right ts: ordering must be
+    chronological, not lexicographic ('T' > ' ' would hide matches)."""
+    right = spark.createDataFrame(
+        [("e", "2024-01-02T10:00:00", 7.0)], "url string, rts string, v double"
+    )
+    left = _ts(
+        spark.createDataFrame(
+            [("e", 1704189605.0)], "url string, ts double"  # 10:00:05 UTC
+        ),
+        "ts",
+    )
+    row = asof_join(left, right, on="url", left_ts="ts", right_ts="rts").first()
+    assert row["v"] == 7.0
+
+
+def test_asof_rejects_colliding_value_columns(spark):
+    right = _ts(
+        spark.createDataFrame([("e", 1.0, 1.0)], "url string, rts double, score double"),
+        "rts",
+    )
+    left = _ts(
+        spark.createDataFrame([("e", 2.0, 9.0)], "url string, ts double, score double"),
+        "ts",
+    )
+    for fn in (asof_join, asof_join_broadcast):
+        with pytest.raises(ValueError, match="collide"):
+            fn(left, right, on="url", left_ts="ts", right_ts="rts")
+        # suffix disambiguates
+        out = fn(left, right, on="url", left_ts="ts", right_ts="rts", suffix="_r")
+        assert "score_r" in out.columns and "score" in out.columns

@@ -243,3 +243,16 @@ def test_hash_split_null_keys_get_a_split(spark):
     docs = spark.createDataFrame([(1,), (None,)], "doc_id long")
     rows = {r["doc_id"]: r["split"] for r in hash_split(docs, "doc_id").collect()}
     assert rows[None] in {"train", "val", "test"}  # never NULL
+
+
+def test_url_query_param_escapes_regex_keys(spark):
+    from ballet_spark.functions.url import url_query_param
+
+    df = spark.createDataFrame(
+        [("http://x.com/p?abc=2&a.c=1&id%5B%5D=3",)], "u string"
+    )
+    got = df.select(
+        url_query_param(F.col("u"), "a.c").alias("dotted"),
+        url_query_param(F.col("u"), "id[]").alias("arr"),  # must not throw
+    ).first()
+    assert got["dotted"] == "1"  # '.' must not match 'b' in abc

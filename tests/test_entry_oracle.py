@@ -142,3 +142,47 @@ def test_minhash_finds_planted_neardups(spark):
     )
     assert len(exact) >= 30  # the plant worked
     pd.testing.assert_frame_equal(got, exact)
+
+
+def test_embedding_neardups_oracle_on_planted_copies(spark, tmp_path):
+    """The sf0.001 embeddings hold no pair at cosine >= 0.5, so the
+    plain oracle run compares empty results. Plant perturbed copies
+    with graded noise: 32 sit far above the threshold (LSH recall ~1 at
+    8 planes x 16 tables) and 8 sit below it, so the exact verify is
+    checked on both sides against the all-pairs DuckDB oracle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    vecs = np.asarray(base.column("embedding").to_pylist(), dtype=np.float64)
+    rng = np.random.default_rng(7)
+    src = rng.choice(len(vecs), size=40, replace=False)
+    # target cosines: noise scale s gives cos ~ 1/sqrt(1 + s^2)
+    cos_target = np.array([0.99, 0.98, 0.97, 0.95] * 8 + [0.45, 0.4, 0.3, 0.2] * 2)
+    scale = np.sqrt(1.0 / cos_target**2 - 1.0)
+    v = vecs[src]
+    noise = rng.standard_normal(v.shape)
+    noise *= (np.linalg.norm(v, axis=1) / np.sqrt(v.shape[1]) * scale)[:, None]
+    copies = pa.table(
+        {
+            "vec_id": pa.array(100_000 + np.arange(40), pa.int64()),
+            "embedding": pa.array(
+                list((v + noise).astype(np.float32)), pa.list_(pa.float32())
+            ),
+            "label": pa.array(base.column("label").to_numpy()[src], pa.int32()),
+        }
+    )
+    pq.write_table(
+        pa.concat_tables([base.select(copies.column_names).cast(copies.schema), copies]),
+        tmp_path / "embeddings.parquet",
+    )
+
+    got = QUERIES["embedding_neardups"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'embeddings.parquet'}')"
+    )
+    exp = con.sql(ORACLES["embedding_neardups"]).df()
+    _compare(got, exp, "embedding_neardups")
+    assert len(got) >= 30

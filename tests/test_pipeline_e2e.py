@@ -7,7 +7,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ballet_spark.core import Feature, FeatureEngineeringPipeline
+from ballet_spark.core import (
+    EncoderPipeline,
+    Feature,
+    FeatureEngineeringPipeline,
+    engineer_features,
+)
 from ballet_spark.functions.text import (
     char_count,
     extract_text_col,
@@ -134,3 +139,26 @@ def test_extract_text_feature_path(webtext_df):
         .filter(F.col("ext") != F.col("text"))
     )
     assert out.count() == 0
+
+
+def test_encoder_pipeline_and_engineer_features(spark, webtext_df):
+    from ballet_spark.operators.fitted import StandardScaler
+
+    labels = webtext_df.select(
+        "url", "warc_ts", F.length("text").cast("double").alias("y")
+    )
+    enc = EncoderPipeline([StandardScaler()], y_col="y")
+    encoded = enc.fit_transform(labels)
+    assert "y_encoded" in encoded.columns
+    stats = encoded.agg(F.avg("y_encoded"), F.stddev_pop("y_encoded")).first()
+    assert abs(stats[0]) < 1e-9 and abs(stats[1] - 1.0) < 1e-6
+
+    res = engineer_features(
+        webtext_df,
+        [Feature("text", SparkFunctionTransformer(char_count), output="tl")],
+        y_df=labels,
+        encoder=EncoderPipeline([StandardScaler()], y_col="y"),
+    )
+    assert res.X.count() == webtext_df.count()
+    assert "tl" in res.X.columns
+    assert res.y is not None and "y_encoded" in res.y.columns

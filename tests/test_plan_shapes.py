@@ -433,35 +433,50 @@ def test_pii_and_segment_removal_are_shuffle_free_maps(spark):
     table (guarded on partition count). The segment-removal query
     additionally persists its chunked projection (the SEG5 HOF would
     otherwise run once per phase), so its one spread exchange now sits
-    INSIDE the InMemoryRelation subtree (which AQE prints twice,
-    final+initial plan) — the rewrite outside the cache must stay
-    exchange-free, and every exchange anywhere must be the round-robin
-    spread, never a hash partitioning of the corpus."""
+    INSIDE the cached relation's plan — the executed tree, walked
+    through the cache, holds exactly one exchange in each query, and
+    it is the round-robin spread, never a hash partitioning of the
+    corpus."""
     import __spark_entry__ as entry
 
-    def _assert_map_only_plus_spread(plan: str) -> None:
-        # exchanges are allowed only as the round-robin spread; the
-        # plan segment OUTSIDE any cached relation may contain at most
-        # one (the cached subtree's plan text repeats it per AQE dump)
-        head = plan.split("InMemoryRelation")[0]
-        assert head.count("Exchange") <= 1, plan
-        assert "hashpartitioning" not in plan, plan
-        if "Exchange" in plan:
-            # never a hash partitioning (which would mean the corpus
-            # is shuffled by key for the rewrite)
-            assert "ROUND_ROBIN" in plan or "RoundRobinPartitioning" in plan, plan
+    def _nodes(node):
+        # the executed tree, unwrapped through AQE, query stages and
+        # the cached relation's own plan
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from _nodes(node.executedPlan())
+            return
+        if name.endswith("QueryStageExec"):
+            yield from _nodes(node.plan())
+            return
+        yield node
+        if name == "InMemoryTableScanExec":
+            yield from _nodes(node.relation().cachedPlan())
+        children = node.children()
+        for i in range(children.size()):
+            yield from _nodes(children.apply(i))
+
+    def _assert_map_only_plus_spread(df) -> None:
+        # exactly one exchange, the round-robin spread, wherever it sits
+        # (inside the cached subtree for segment removal); never a hash
+        # partitioning, which would mean the corpus is shuffled by key
+        plan = df._jdf.queryExecution().executedPlan()
+        shuffles = [
+            n for n in _nodes(plan)
+            if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        ]
+        assert len(shuffles) == 1, plan.toString()
+        partitioning = shuffles[0].outputPartitioning().getClass().getSimpleName()
+        assert partitioning == "RoundRobinPartitioning", plan.toString()
+        assert "hashpartitioning" not in plan.toString(), plan.toString()
 
     df = entry.queries()["pii_redaction_docs"](spark, "/root/testdata/sf0.001")
-    _assert_map_only_plus_spread(
-        df._jdf.queryExecution().executedPlan().toString()
-    )
+    _assert_map_only_plus_spread(df)
 
     df2 = entry.queries()["remove_frequent_segments_docs"](
         spark, "/root/testdata/sf0.001"
     )
-    _assert_map_only_plus_spread(
-        df2._jdf.queryExecution().executedPlan().toString()
-    )
+    _assert_map_only_plus_spread(df2)
 
 
 def test_lsh_index_bucketed_probe_has_no_index_side_exchange(spark):

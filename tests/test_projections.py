@@ -5,7 +5,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ballet_spark.core import Feature, FeatureEngineeringPipeline
+from ballet_spark.core import (
+    Feature,
+    FeatureEngineeringPipeline,
+    PipelineContext,
+)
 from ballet_spark.operators.projections import (
     GaussianRandomProjection,
     Normalizer,
@@ -126,3 +130,13 @@ def test_as_of_slice_and_split(xy_df):
     assert (
         as_of_slice(df, exact_t).filter(F.col("warc_ts") == F.lit(exact_t)).count() == 1
     )
+
+
+def test_quantile_transformer_propagates_nulls(spark):
+    from ballet_spark.operators.projections import QuantileTransformer
+
+    df = spark.createDataFrame([(float(i),) for i in range(1, 21)] + [(None,)], "x double")
+    ctx = PipelineContext(point_in_time=False)
+    qt = QuantileTransformer(n_quantiles=5).fit(df, ["x"], ctx)
+    out, names = qt.transform_df(df, ["x"], "q", ctx)
+    assert out.filter(F.col(names[0]).isNull()).count() == 1

@@ -320,3 +320,10 @@ def test_gfssf_discrete_select_decisions(spark):
     rep2 = {d["feature"]: d for d in gfssf_discrete_select(df2, ["x", "extra"], "junk", "y")}
     assert not rep2["junk"]["kept"]
     assert rep2["x"]["kept"] and rep2["extra"]["kept"]
+
+
+def test_shannon_entropy_empty_frame(spark):
+    from ballet_spark.validation.entropy import shannon_entropy_spark
+
+    empty = spark.createDataFrame([], "c string")
+    assert shannon_entropy_spark(empty, ["c"]) == 0.0
