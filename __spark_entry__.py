@@ -1322,7 +1322,7 @@ def curation_pipeline_v2(spark, sf_dir):
     # entire six-stage chain (three Arrow kernels among them) runs as
     # a chain of single-task stages. Guarded: a real multi-split
     # table is left untouched. Same pattern as dedup_substrings.
-    from ballet_spark.cache import spread_small_input
+    from ballet_spark.cache import persist_tracked, spread_small_input
 
     all_docs = spread_small_input(all_docs)
     eval_docs = all_docs.filter(F.col("doc_id") % 10 == 0)
@@ -1333,15 +1333,16 @@ def curation_pipeline_v2(spark, sf_dir):
     scored = score_char_bigram_lm(train, lm, "text")
     # g1 is scanned by the NB fit action, NB scoring, and the final
     # DAG — persist the gate output so the LM kernel runs once.
-    # Lifecycle: the caller owns the returned DataFrame, so these two
-    # persists cannot be unpersisted here; they are gate-survivor
-    # projections (three narrow columns), small relative to any
-    # corpus this runs on, and the bench harness clearCache()s
-    # between draws. A production materialization would checkpoint
-    # through plans/materialize.py instead.
-    g1 = scored.filter(_sround(F.col("lm_logp"), 6) >= -1.78).select(
-        "doc_id", "lang", "text"
-    ).persist()
+    # Lifecycle: the caller owns the returned DataFrame, so this
+    # query's four persists stay alive after it returns; they are
+    # registered under scope "query", and release_caches("query") /
+    # (None) frees them once the caller has consumed the result.
+    g1 = persist_tracked(
+        scored.filter(_sround(F.col("lm_logp"), 6) >= -1.78).select(
+            "doc_id", "lang", "text"
+        ),
+        scope="query",
+    )
 
     # 2. NB label-consistency gate (integer sign test, engine-exact)
     labeled = g1.withColumn("y", (F.col("lang") == "en").cast("int"))
@@ -1349,9 +1350,12 @@ def curation_pipeline_v2(spark, sf_dir):
     nb = score_nb_tokens(g1, model, "text")
     # g2 feeds dedup_lines, which scans its input for the winner agg
     # AND the join back — persist so the NB kernel runs once
-    g2 = nb.filter(
-        F.col("nb_pred") == (F.col("lang") == "en")
-    ).select("doc_id", "lang", "text").persist()
+    g2 = persist_tracked(
+        nb.filter(F.col("nb_pred") == (F.col("lang") == "en")).select(
+            "doc_id", "lang", "text"
+        ),
+        scope="query",
+    )
 
     # 3. sub-document exact dedup on deterministic 5-word chunks.
     # Tokenize on \s+ (not ' '): the chunks are '\n'-joined and
@@ -1365,13 +1369,16 @@ def curation_pipeline_v2(spark, sf_dir):
         "lang",
         "filter(split(trim(text), '\\\\s+'), x -> x != '') AS __ftoks",
     ).selectExpr("doc_id", "lang", f"{_SEG5_EXPR} AS t2")
-    # persist (same lifecycle note as g1/g2 above): decontaminate
+    # persist (same lifecycle note as g1 above): decontaminate
     # references its corpus TWICE (gram probe pass + the final left
     # join), which would re-run dedup_lines' three shuffles per
     # reference
-    cleaned = dedup_lines(
-        seg, id_col="doc_id", text_col="t2", out_col="ct"
-    ).select("doc_id", "lang", F.col("ct").alias("text")).persist()
+    cleaned = persist_tracked(
+        dedup_lines(seg, id_col="doc_id", text_col="t2", out_col="ct").select(
+            "doc_id", "lang", F.col("ct").alias("text")
+        ),
+        scope="query",
+    )
 
     # 4. decontaminate the cleaned text vs the eval slice
     dec = decontaminate(
@@ -1384,9 +1391,10 @@ def curation_pipeline_v2(spark, sf_dir):
     # apply_mixing's corpus side, and pack_sequences' window + shard
     # totals) — measured 12.2s of the query's 16.7s was re-running
     # dedup_lines + decontaminate once per reference
-    g4 = dec.filter(~F.col("contaminated")).select(
-        "doc_id", "lang", "text"
-    ).persist()
+    g4 = persist_tracked(
+        dec.filter(~F.col("contaminated")).select("doc_id", "lang", "text"),
+        scope="query",
+    )
 
     # 5. mix to a fixed language target
     target = {"en": 0.5, "de": 0.125, "fr": 0.125, "es": 0.125, "zh": 0.125}
@@ -1714,7 +1722,7 @@ def remove_frequent_segments_docs(spark, sf_dir):
         # projection so it runs once. Guarded by the same small-input
         # condition as the spread — a real multi-split corpus
         # recomputes rather than caching corpus-scale rows. Lifecycle:
-        # caller-owned (same documented pattern as curation's gate
+        # caller-owned (same pattern as curation_pipeline_v2's gate
         # persists); registered under scope "spread" so
         # release_caches("spread") / (None) can free it, and the bench
         # clearCache()s between draws.
@@ -2390,14 +2398,6 @@ def oracle_sql() -> dict[str, str]:
                       ORDER BY cosine DESC, neighbor_id ASC) AS rank
                   FROM scored)
             WHERE rank <= 5
-        """,
-        "embedding_neardups": """
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                                b.embedding::DOUBLE[]), 4) AS cosine
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-                                         b.embedding::DOUBLE[]) >= 0.5
         """,
         "semi_anti_join": """
             SELECT c_custkey, 'has_orders' AS tag FROM customer

@@ -1,19 +1,17 @@
 """Deterministic release of operator-persisted intermediates.
 
-The pair generators (dedup), ANN builders (similarity), and streaming
-serving paths persist shared intermediates because BOTH self-join
-sides and the verify stage reference them — unpersisting inside the
-operator would silently recompute the whole signature DAG per
-reference. That leaves the blocks alive until the session ends, which
-accumulates executor storage across repeated dedup/serving calls.
+The pair generators (dedup) and ANN builders (similarity) persist
+shared intermediates because BOTH self-join sides and the verify stage
+reference them — unpersisting inside the operator would silently
+recompute the whole signature DAG per reference. That leaves the blocks
+alive until the session ends, which accumulates executor storage
+across repeated dedup calls.
 
 This registry is the middle path: every operator-persist goes through
 :func:`persist_tracked` under a SCOPE, and callers release exactly one
 scope's blocks with :func:`release_caches(scope)` — no global
 ``spark.catalog.clearCache()`` that would also evict caches the caller
-created for other reasons, and releasing the batch-dedup scope cannot
-unpersist the long-lived history table a live streaming serve depends
-on (scope ``"serving"``).
+created for other reasons.
 """
 
 from __future__ import annotations
@@ -38,8 +36,8 @@ def release_caches(scope: str | None = "dedup") -> int:
     ``scope`` (``None`` = every scope) and drop it from the registry.
     Returns how many handles were released. Safe after a session stop
     — dead handles are skipped. The default releases only the
-    batch-dedup scope; long-lived serving caches (scope ``"serving"``)
-    are released only when named explicitly or with ``None``."""
+    batch-dedup scope; every other scope is released only when named
+    explicitly or with ``None``."""
     if scope is not None and not isinstance(scope, str):
         # a SparkSession/DataFrame passed by mistake would silently
         # release nothing (no registry key ever equals it) — the
@@ -80,10 +78,6 @@ def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     production split) and vanishes at scale. The one spread rule:
     every per-row-heavy operator calls this directly.
 
-    Streaming DataFrames pass through untouched: their partition count
-    is not knowable at plan time (``df.rdd`` is illegal on a stream)
-    and micro-batch parallelism is the source's concern.
-
     Cost control: the partition-count probe (``df.rdd``) physically
     plans the whole query — measured ~0.27s of pure driver time on a
     deep mid-pipeline plan, and chained operators each re-probe. A
@@ -107,8 +101,6 @@ def spread_small_input(df: DataFrame, share: bool = False) -> DataFrame:
     choice at scale. Registered under scope ``"spread"`` for
     :func:`release_caches`; the persist is lazy (the first consuming
     job materializes it)."""
-    if df.isStreaming:
-        return df
     try:
         stack = [df._jdf.queryExecution().analyzed()]
         while stack:

@@ -13,10 +13,11 @@ Spark has no native as-of join. Two strategies:
   the as-of timestamp is excluded"), matching pandas
   ``merge_asof(allow_exact_matches=True)`` and ballet's
   fit-on-train inclusivity (SURVEY.md §7 hard parts).
-- :func:`asof_join_broadcast` — for a SMALL right side: broadcast
-  range-join + ``max_by`` per probe row. No shuffle of the big probe
-  side at all; the right plan when joining a large probe stream against
-  a compact per-entity state table.
+- :func:`asof_join_broadcast` — for a SMALL right side: broadcast one
+  time-sorted history array per entity and pick the latest eligible
+  element per probe row. No shuffle of the big probe side at all; the
+  right plan when joining a large probe table against a compact
+  per-entity history.
 
 Leakage: both strategies can only look backward; a probe row can never
 see right-side rows with ``right_ts > left_ts``.
@@ -59,8 +60,8 @@ def asof_join(
     value_cols = list(value_cols)
     _check_collisions(left, value_cols, suffix)
     # a right row with NULL event time can never be "the latest as of
-    # t": filter up front so every path (window, broadcast, history)
-    # shares the semantic — NULLS FIRST ordering would otherwise park
+    # t": filter up front so both paths (window, broadcast)
+    # share the semantic — NULLS FIRST ordering would otherwise park
     # such rows at the start of the window path's frame and
     # last(ignorenulls) would surface values of unknown time
     # (leakage), diverging from the broadcast path's __hts <= lts
@@ -277,33 +278,14 @@ def asof_join_broadcast(
     value_cols = list(value_cols)
     _check_collisions(left, value_cols, suffix)
     # a right row with NULL event time can never be "the latest as of
-    # t": filter up front so every path (window, broadcast, history)
-    # shares the semantic — NULLS FIRST ordering would otherwise park
+    # t": filter up front so both paths (window, broadcast)
+    # share the semantic — NULLS FIRST ordering would otherwise park
     # such rows at the start of the window path's frame and
     # last(ignorenulls) would surface values of unknown time
     # (leakage), diverging from the broadcast path's __hts <= lts
     right = right.where(F.col(right_ts).isNotNull())
 
-    hist = entity_history(right, on, right_ts, value_cols)
-    return asof_join_history(
-        left, hist, on, left_ts, value_cols, tolerance_s, suffix
-    )
-
-
-def entity_history(
-    right: DataFrame,
-    on: str = "url",
-    right_ts: str = "warc_ts",
-    value_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """ONE row per entity holding its time-sorted history as an array
-    of structs — the compact broadcastable state table. Build (and
-    persist) this ONCE when serving many probe batches against the
-    same features (e.g. a probe STREAM: without it every micro-batch
-    re-runs the groupBy+collect aggregation)."""
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in (on, right_ts)]
-    return right.groupBy(F.col(on)).agg(
+    hist = right.groupBy(F.col(on)).agg(
         F.sort_array(
             F.collect_list(
                 F.struct(
@@ -313,30 +295,6 @@ def entity_history(
             )
         ).alias("__hist")
     )
-
-
-def asof_join_history(
-    left: DataFrame,
-    hist: DataFrame,
-    on: str = "url",
-    left_ts: str = "ts",
-    value_cols: Sequence[str] | None = None,
-    tolerance_s: int | None = None,
-    suffix: str = "",
-) -> DataFrame:
-    """Probe side of the broadcast as-of against a prebuilt
-    :func:`entity_history` table."""
-    if value_cols is None:
-        value_cols = [
-            f.name
-            for f in hist.schema["__hist"].dataType.elementType.fields
-            if f.name != "__hts"
-        ]
-    value_cols = list(value_cols)
-    _check_collisions(left, value_cols, suffix)
-    # NULL __hts entries need no filter here: the __hts <= lts
-    # eligibility predicate below is NULL-false, so unknown-time
-    # history rows can never match (same semantic as asof_join)
     joined = left.join(F.broadcast(hist), on, "left")
     lts = F.col(left_ts).cast("timestamp")
     elig = F.filter(F.col("__hist"), lambda s: s["__hts"] <= lts)

@@ -178,11 +178,6 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).tolist()
-
-
 def srp_planes(
     dim: int, n_planes: int, n_tables: int, seed: int = 42
 ) -> "np.ndarray":
@@ -192,16 +187,6 @@ def srp_planes(
     Spark and DuckDB). Shape (n_tables, n_planes, dim)."""
     rng = np.random.default_rng(seed)
     return np.round(rng.standard_normal((n_tables, n_planes, dim)), 6)
-
-
-def bucket_expr(vec_col: str, planes) -> Column:
-    """SRP bucket id of one table: sign bits of the plane projections.
-    Pure JVM fold — no Python in the scoring path."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        proj = dot_expr(F.col(vec_col), F.array(*[F.lit(float(x)) for x in p]))
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
 
 
 def lsh_bucket_tables(
@@ -224,8 +209,8 @@ def lsh_bucket_tables(
     One mapInArrow kernel reads the vector column's flat Arrow value
     buffer, computes all L·b plane projections in ONE float64 matmul
     per batch and appends the L bucket ids as ``__bks array<bigint>``,
-    which the JVM posexplodes. The interpreted Column fold
-    (:func:`bucket_expr`) costs ~100× more; sign flips vs a
+    which the JVM posexplodes. An interpreted per-plane Column fold of
+    the same projections costs ~100× more; sign flips vs a
     sequential-sum engine need |dot| ≲ 1e-13 against typical |dot| ≈
     √dim — negligible. Input columns pass through with their own
     types (``array<float>`` stays float). NULL vectors get NULL
@@ -272,21 +257,6 @@ def lsh_bucket_tables(
     return df.mapInArrow(kernel, out_schema).select(
         *df.columns, F.posexplode("__bks").alias("tbl", "bucket")
     )
-
-
-def lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 42,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Random-hyperplane (SRP) LSH bucket id: sign bits of ``n_planes``
-    fixed seeded projections. Same-bucket vectors are cosine-close with
-    high probability; 2^n_planes buckets."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    return df.withColumn(out_col, bucket_expr(vec_col, planes))
 
 
 def cosine_topk_lsh(

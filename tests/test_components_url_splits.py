@@ -256,3 +256,16 @@ def test_url_query_param_escapes_regex_keys(spark):
         url_query_param(F.col("u"), "id[]").alias("arr"),  # must not throw
     ).first()
     assert got["dotted"] == "1"  # '.' must not match 'b' in abc
+
+
+def test_train_val_split_covers_null_ts(spark):
+    from ballet_spark.plans.splits import train_val_split
+
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, 5.0), (3, None)], "id long, ts double"
+    )
+    tr, va = train_val_split(df, 2.0, time_col="ts")
+    assert tr.count() + va.count() == 3  # nothing vanishes
+    assert va.filter("id = 3").count() == 1  # default: undated -> val
+    tr2, va2 = train_val_split(df, 2.0, time_col="ts", on_null="drop")
+    assert tr2.count() + va2.count() == 2

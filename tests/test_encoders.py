@@ -4,8 +4,9 @@
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
-from ballet_spark.core import Feature, FeatureEngineeringPipeline
+from ballet_spark.core import Feature, FeatureEngineeringPipeline, PipelineContext
 from ballet_spark.operators.encoders import (
     CountEncoder,
     HashingEncoder,
@@ -179,3 +180,28 @@ def test_rare_label_encoder(cat_df, cat_pdf):
     freq = p["cat"].value_counts(normalize=True)
     exp = p["cat"].map(lambda c: c if freq[c] >= 0.10 else "Rare")
     assert (out["r"].to_numpy() == exp.to_numpy()).all()
+
+
+def test_rare_label_frequent_null_category(spark):
+    from ballet_spark.operators.encoders import RareLabelEncoder
+
+    rows = [(None,)] * 5 + [("a",)] * 4 + [("z",)]
+    df = spark.createDataFrame(rows, "cat string")
+    ctx = PipelineContext(point_in_time=False)
+    enc = RareLabelEncoder(tol=0.2).fit(df, ["cat"], ctx)
+    out, names = enc.transform_df(df, ["cat"], "r", ctx)
+    vals = [r[names[0]] for r in out.collect()]
+    # NULL is 50% frequent: stays NULL (a real category), never 'Rare'
+    assert vals.count(None) == 5
+    assert vals.count("a") == 4
+    assert vals.count("Rare") == 1  # the singleton 'z'
+
+
+def test_ordinal_encoder_cardinality_guard(spark):
+    from ballet_spark.operators.encoders import OrdinalEncoder
+
+    df = spark.range(50).select(F.col("id").cast("string").alias("cat"))
+    ctx = PipelineContext(point_in_time=False)
+    with pytest.raises(ValueError, match="distinct categories"):
+        OrdinalEncoder(max_categories=10).fit(df, ["cat"], ctx)
+    OrdinalEncoder(max_categories=100).fit(df, ["cat"], ctx)  # under cap: fine

@@ -186,3 +186,25 @@ def test_embedding_neardups_oracle_on_planted_copies(spark, tmp_path):
     exp = con.sql(ORACLES["embedding_neardups"]).df()
     _compare(got, exp, "embedding_neardups")
     assert len(got) >= 30
+
+
+def test_hand_written_and_generated_oracles_are_disjoint(monkeypatch):
+    """oracle_sql() overlays the generated texts on the hand-written
+    ones; a key in both would leave a hand-written text that never
+    takes effect."""
+    generated = entrymod._generated_oracles()
+    monkeypatch.setattr(entrymod, "_generated_oracles", lambda: {})
+    hand_written = entrymod.oracle_sql()
+    assert not set(hand_written) & set(generated)
+
+
+def test_curation_pipeline_v2_persists_are_released(spark):
+    """Every persist the query makes is registered, so
+    release_caches(None) frees it once the result is consumed."""
+    from ballet_spark.cache import release_caches
+
+    live = spark.sparkContext._jsc.getPersistentRDDs
+    before = live().size()
+    QUERIES["curation_pipeline_v2"](spark, SF_DIR).collect()
+    release_caches(None)
+    assert live().size() <= before

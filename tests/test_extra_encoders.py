@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ballet_spark.core import Feature, FeatureEngineeringPipeline
+from ballet_spark.core import Feature, FeatureEngineeringPipeline, PipelineContext
 from ballet_spark.operators.encoders import (
     BinaryEncoder,
     FrequencyEncoder,
@@ -144,3 +144,46 @@ def test_drop_missing_and_trim(cat_df2, cat_pdf2):
     lo, hi = cat_pdf2["x"].quantile([0.1, 0.9])
     exp_n = cat_pdf2["x"].between(lo, hi).sum()
     assert abs(len(trimmed) - exp_n) <= 1  # interpolation boundary slack
+
+
+def test_ordered_target_encode_tie_safe(spark):
+    """Two rows sharing (category, ts) must neither see each other's
+    label nor depend on partition order — both get the stats of rows
+    STRICTLY earlier in time."""
+    from ballet_spark.operators.encoders import OrderedTargetEncoder
+
+    df = spark.createDataFrame(
+        [("a", 1.0, 1.0), ("a", 2.0, 0.0), ("a", 2.0, 1.0), ("a", 3.0, 1.0)],
+        "cat string, t double, y double",
+    )
+    ctx = PipelineContext(entity_col="cat", time_col="t", point_in_time=True)
+    enc = OrderedTargetEncoder(y_col="y", a=1.0).fit(df, ["cat"], ctx)
+    (expr,) = enc.transform_exprs([F.col("cat")], ctx)
+    got = df.select("t", "y", expr.alias("ote")).collect()
+    by = {}
+    for r in got:
+        by.setdefault(r["t"], []).append(r["ote"])
+    # S=3, C=4, prior=0.75. t=1: (0*4+3)/(1*4)=0.75
+    assert by[1.0][0] == pytest.approx(0.75)
+    # t=2 rows BOTH see only t=1 stats: (1*4+3)/(2*4)=0.875 — identical
+    assert by[2.0][0] == by[2.0][1] == pytest.approx(0.875)
+    # t=3 sees all three earlier rows: (2*4+3)/(4*4)=0.6875
+    assert by[3.0][0] == pytest.approx(0.6875)
+
+
+def test_basen_unseen_gets_unique_zero_vector(spark):
+    from ballet_spark.operators.encoders import BaseNEncoder
+
+    train = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], "cat string")
+    test = spark.createDataFrame(
+        [("a",), ("d",), ("zz",), (None,)], "cat string"
+    )
+    ctx = PipelineContext(point_in_time=False)
+    enc = BaseNEncoder(base=2).fit(train, ["cat"], ctx)
+    exprs = enc.transform_exprs([F.col("cat")], ctx)
+    rows = test.select("cat", *[e.alias(f"d{i}") for i, e in enumerate(exprs)]).collect()
+    vecs = {r["cat"]: tuple(r[f"d{i}"] for i in range(len(exprs))) for r in rows}
+    assert vecs["zz"] == vecs[None]  # unknowns share the zero vector
+    assert all(v == 0 for v in vecs["zz"])
+    # and no real category collides with it
+    assert vecs["a"] != vecs["zz"] and vecs["d"] != vecs["zz"]

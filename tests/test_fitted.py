@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
 
-from ballet_spark.core import Feature, FeatureEngineeringPipeline
+from ballet_spark.core import Feature, FeatureEngineeringPipeline, PipelineContext
 from ballet_spark.operators.fitted import (
     Binarizer,
     BoxCoxTransformer,
@@ -262,3 +262,19 @@ def test_fit_params_frozen_against_test_distribution(spark, num_df, num_pdf):
     ).fit(num_df)
     got = fitted.transform(test).toPandas()["s"]
     assert got.mean() > 10  # ~100/std, nowhere near 0
+
+
+def test_winsorizer_and_kbins_preserve_nulls(spark):
+    from ballet_spark.operators.fitted import KBinsDiscretizer, Winsorizer
+
+    df = spark.createDataFrame(
+        [(float(i),) for i in range(1, 21)] + [(None,)], "x double"
+    )
+    ctx = PipelineContext(point_in_time=False)
+    w = Winsorizer(0.05, 0.95).fit(df, ["x"], ctx)
+    out, names = w.transform_df(df, ["x"], "xw", ctx)
+    assert out.filter(F.col(names[0]).isNull()).count() == 1  # not imputed to lo
+    for strat in ("quantile", "uniform"):
+        kb = KBinsDiscretizer(n_bins=4, strategy=strat).fit(df, ["x"], ctx)
+        out, names = kb.transform_df(df, ["x"], "xb", ctx)
+        assert out.filter(F.col(names[0]).isNull()).count() == 1, strat

@@ -409,3 +409,10 @@ def test_digest_grid_builds_one_hash_per_feature(
         "snapA", n_units=n_units, feature_lineage_path=str(tmp_path / "flin"),
     )
     assert len(calls) == 1 + len(feats)
+
+
+def test_backfill_job_requires_input_or_generate():
+    from scripts.backfill_job import main
+
+    with pytest.raises(SystemExit):
+        main(["--output", "/tmp/x", "--lineage", "/tmp/y", "--snapshot", "s"])

@@ -3,8 +3,13 @@ materialize wide matrix keyed by (url, warc_ts) → numpy.allclose vs a
 single-node pandas pipeline with reference fit/transform semantics.
 This is the BASELINE.json correctness bar."""
 
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ballet_spark.core import (
@@ -162,3 +167,78 @@ def test_encoder_pipeline_and_engineer_features(spark, webtext_df):
     assert res.X.count() == webtext_df.count()
     assert "tl" in res.X.columns
     assert res.y is not None and "y_encoded" in res.y.columns
+
+
+def test_stateful_step_after_step_in_pipeline(spark, webtext_df):
+    """A stateful df-path step fitted mid-pipeline keys its params by
+    the fit-time intermediate column names — transform must reproduce
+    those names exactly."""
+    from ballet_spark.operators.base import NullFiller
+    from ballet_spark.operators.fitted import Groupwise, StandardScaler
+
+    df = webtext_df.withColumn("text_len", F.length("text").cast("double"))
+    feat = Feature(
+        "text_len", [NullFiller(), Groupwise(StandardScaler(), by="lang")],
+        output="z",
+    )
+    m = FeatureEngineeringPipeline([feat]).fit(df).transform(df)
+    assert m.filter(F.col(m.columns[-1]).isNotNull()).count() > 0
+
+
+def test_subset_selector_single_string_not_exploded(spark, webtext_df):
+    feat = Feature("text", ((lambda df: "text"), None), output="t2")
+    m = FeatureEngineeringPipeline([feat]).fit(webtext_df).transform(webtext_df)
+    assert "t2" in m.columns  # would raise AnalysisException on 't','e','x','t'
+
+
+def test_callable_input_pinned_at_fit(spark):
+    """A callable selector resolves against the TRAIN schema; a
+    transform frame with extra/reordered columns must not remap the
+    fitted params."""
+    from ballet_spark.operators.fitted import StandardScaler
+
+    train = spark.createDataFrame(
+        [("u", float(i), float(i) * 100.0) for i in range(10)],
+        "url string, a double, b double",
+    ).withColumn("warc_ts", F.timestamp_seconds(F.col("a")))
+    # selector: all double columns in schema order
+    feat = Feature(
+        lambda df: [c for c, t in df.dtypes if t == "double"],
+        StandardScaler(),
+        output="s",
+    )
+    fitted = FeatureEngineeringPipeline([feat]).fit(train)
+    # new frame with an extra double column FIRST in the schema
+    shifted = train.select(
+        F.lit(1e9).alias("zz"), "url", "warc_ts", "a", "b"
+    )
+    out = fitted.transform(shifted).toPandas()
+    # column a scaled by a's own fit stats: mean 4.5, stddev_pop
+    # ~2.8723 -> min value (0-4.5)/2.8723 ~ -1.5667. If the selector
+    # re-resolved against the shifted schema, 'a' would be scaled by
+    # zz/b stats instead and neither assertion holds.
+    import numpy as np
+
+    a_scaled = sorted(out["s_0"].tolist())
+    assert abs(np.mean(a_scaled)) < 1e-9  # a scaled by its own stats
+    assert a_scaled[0] == pytest.approx(-1.5667, abs=1e-3)
+
+
+def test_hash_callable_stable_across_processes():
+    """Nested lambdas put code objects into co_consts; their repr
+    embeds addresses. The hash must be identical in separate
+    interpreter processes."""
+    code = (
+        f"import sys; sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})\n"
+        "from ballet_spark.core import _hash_callable\n"
+        "def sel(df):\n"
+        "    return sorted(['a', 'bb'], key=lambda c: len(c))\n"
+        "print(_hash_callable(sel))\n"
+    )
+    outs = {
+        subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, check=True
+        ).stdout.strip()
+        for _ in range(2)
+    }
+    assert len(outs) == 1, outs

@@ -81,3 +81,16 @@ def test_hard_imputers_raise_clearly():
         KNNImputer().fit(None, ["v"], None)
     with pytest.raises(ValueError, match="feature_cols"):
         IterativeImputer().fit(None, ["v"], None)
+
+
+def test_registry_does_not_mutate_callers_feature(spark):
+    from ballet_spark.registry import FeatureRegistry
+
+    f = Feature("text", None, output="t")
+    reg = FeatureRegistry()
+    reg.register("alice/feature_t", f)
+    reg2 = FeatureRegistry()
+    reg2.register("bob/feature_t", f)
+    assert f.source == ""  # caller's object untouched
+    assert reg.features["alice/feature_t"].source == "alice/feature_t"
+    assert reg2.features["bob/feature_t"].source == "bob/feature_t"

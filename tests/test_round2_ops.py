@@ -359,3 +359,21 @@ def test_remove_frequent_lines_boilerplate(spark):
         .toString()
     )
     assert "Exchange" not in plan
+
+
+def test_stopword_ratio_empty_list_is_zero(spark):
+    from ballet_spark.functions.text import stopword_ratio
+
+    df = spark.createDataFrame([("the cat and the dog",)], "text string")
+    r_default = df.select(stopword_ratio(F.col("text")).alias("r")).first()["r"]
+    r_empty = df.select(stopword_ratio(F.col("text"), []).alias("r")).first()["r"]
+    assert r_default > 0
+    assert r_empty == 0.0
+
+
+def test_gopher_filter_rejects_unknown_threshold(spark):
+    from ballet_spark.functions.text import gopher_filter
+
+    df = spark.createDataFrame([(1, "some text here")], "doc_id long, text string")
+    with pytest.raises(TypeError, match="unknown gopher threshold"):
+        gopher_filter(df, minwords=5)  # typo'd key must not pass silently

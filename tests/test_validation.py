@@ -327,3 +327,36 @@ def test_shannon_entropy_empty_frame(spark):
 
     empty = spark.createDataFrame([], "c string")
     assert shannon_entropy_spark(empty, ["c"]) == 0.0
+
+
+def test_discover_averages_stats_over_feature_columns(spark):
+    from ballet_spark.validation.discovery import discover
+
+    df = spark.createDataFrame(
+        [(float(i), float(i) * 10) for i in range(1, 11)], "a double, b double"
+    )
+    out = discover(df, {"f": ["a", "b"]})
+    rec = out[out.feature == "f"].iloc[0]
+    # mean = avg(mean(a)=5.5, mean(b)=55) = 30.25, not mean(a)
+    assert rec["mean"] == pytest.approx(30.25)
+    assert rec["ncols"] == 2
+
+
+def test_validate_feature_catches_unseen_group_failure(spark):
+    """A params-join operator with handle_unknown='error' must FAIL the
+    new-rows check (the holdout now contains genuinely unseen
+    entities)."""
+    from ballet_spark.operators.fitted import Groupwise, SimpleImputer
+    from ballet_spark.validation.checks import validate_feature
+
+    rows = [(f"u{i}", float(i), float(i)) for i in range(40)]
+    df = spark.createDataFrame(rows, "url string, sec double, text_len double").select(
+        "url", F.timestamp_seconds("sec").alias("warc_ts"), "text_len"
+    )
+    bad = Feature(
+        "text_len",
+        Groupwise(SimpleImputer("mean"), by="url", handle_unknown="error"),
+        output="g",
+    )
+    res = validate_feature(bad, df)
+    assert any("can_transform_new_rows" in f for f in res.failures)
