@@ -575,6 +575,8 @@ def embedding_neardup_pairs(
     import numpy as np
 
     from ballet_spark.operators.similarity import (
+        _norms,
+        _vectors,
         cosine_expr,
         lsh_bucket_tables,
     )
@@ -610,17 +612,16 @@ def embedding_neardup_pairs(
     # np.stack PER GROUP, more than the scoring itself.
     id_t = df.schema[id_col].dataType.simpleString()
     bucketed = lsh_bucket_tables(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
-        "v", dim, n_planes, n_tables, seed,
-    ).select("tbl", "bucket", "id", "v")
+        df.select(F.col(id_col).alias("id"), vec_col),
+        vec_col, dim, n_planes, n_tables, seed,
+    ).select("tbl", "bucket", "id", vec_col)
 
     def _score_group(M):
         """Lists of (row_a, row_b, cosine) arrays: the passing pairs of
         one (tbl, bucket) group whose rows are in id order; positions
         decide id_a < id_b."""
         m = len(M)
-        nrm = np.linalg.norm(M, axis=1)
-        nrm[nrm == 0.0] = 1.0
+        nrm = _norms(M)
         ra, rb, cs = [], [], []
         # block height bounds the B×m score matrix (same discipline as
         # semantic_dedup; n_planes is sized so buckets stay small, this
@@ -674,9 +675,7 @@ def embedding_neardup_pairs(
             carry = batch.slice(bounds[-1])
             if len(bounds) < 2:
                 continue
-            vs = batch.column(3).slice(0, bounds[-1])
-            M = vs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            M = M.reshape(len(vs), -1)
+            M = _vectors(batch.column(3).slice(0, bounds[-1]), dim, vec_col)
             ra, rb, cs = [], [], []
             for s, e in zip(bounds[:-1], bounds[1:]):
                 if e - s > 1:
@@ -1189,32 +1188,33 @@ def semantic_dedup(
     more centroids (size k with :func:`semdedup_auto_k` so expected
     cluster size stays constant as the corpus grows)."""
     import numpy as np
+    import pyarrow as pa
 
-    from ballet_spark.operators.similarity import ivf_assign
+    from ballet_spark.operators.similarity import _norms, _vectors, ivf_assign
 
     id_t = df.schema[id_col].dataType.simpleString()
+    dim = np.asarray(cents).shape[1]
     # NULL embeddings can't be clustered or scored: drop them here
-    # (ivf_assign gives them centroid NULL; letting that group reach
-    # the kernel would crash its np.stack). A NULL-embedding row is
+    # (ivf_assign gives them centroid NULL). A NULL-embedding row is
     # absent from the output — it is never a duplicate of anything.
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).where(
-        F.col("v").isNotNull()
+    base = df.select(F.col(id_col).alias("id"), vec_col).where(
+        F.col(vec_col).isNotNull()
     )
-    tagged = ivf_assign(base, cents, vec_col="v", out_col="centroid_id")
+    tagged = ivf_assign(base, cents, vec_col=vec_col, out_col="centroid_id")
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if max_cluster is not None and len(pdf) > max_cluster:
+    def kernel(t: pa.Table) -> pa.Table:
+        m = t.num_rows
+        if max_cluster is not None and m > max_cluster:
             raise ValueError(
                 f"semantic_dedup: cluster "
-                f"{int(pdf['centroid_id'].iloc[0])} has {len(pdf)} members"
+                f"{t.column('centroid_id')[0].as_py()} has {m} members"
                 f" > max_cluster={max_cluster}; raise k (use "
                 "semdedup_auto_k) so the per-cluster quadratic term "
                 "stays bounded"
             )
-        pdf = pdf.sort_values("id", kind="mergesort").reset_index(drop=True)
-        M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(M, axis=1)
-        nrm[nrm == 0.0] = 1.0
+        t = t.sort_by("id")  # stable: equal ids keep their input order
+        M = _vectors(t.column(vec_col), dim, vec_col)
+        nrm = _norms(M)
         # max cosine to any SMALLER-id member, computed BLOCKWISE:
         # row block [s,e) only ever multiplies against columns [0,e)
         # (later ids can't be a row's predecessor), so peak memory is
@@ -1227,7 +1227,6 @@ def semantic_dedup(
         # the exact float recipe of similarity.py::cosine_topk, proven
         # hash-identical to DuckDB's list_cosine_similarity in the
         # embedding_topk oracle — so grid-rounded values are unchanged.
-        m = len(M)
         mx = np.full(m, -np.inf)
         # block height adapts so the B×m block matrix stays ≤ ~64 MB
         # even on a pathological hot cluster (max_cluster/auto-k bound
@@ -1242,21 +1241,18 @@ def semantic_dedup(
             mx[s:e] = S.max(axis=1)
         mx[0] = np.nan  # smallest id: no predecessor
         q = np.sign(mx) * np.floor(np.abs(mx) * 1e6 + 0.5) / 1e6
-        return pd.DataFrame(
+        return pa.table(
             {
-                "id": pdf["id"],
-                "centroid_id": pdf["centroid_id"].astype("int32"),
-                "cluster_size": np.int64(len(pdf)),
-                # nullable Float64: NaN must surface as SQL NULL, not NaN
-                "max_prev_cos": pd.array(
-                    [None if np.isnan(x) else float(x) for x in mx],
-                    dtype="Float64",
-                ),
-                "is_dup": np.where(np.isnan(q), False, q >= threshold),
+                "id": t.column("id"),
+                "centroid_id": t.column("centroid_id"),
+                "cluster_size": np.full(m, m, dtype=np.int64),
+                # NaN (no predecessor, or NaN components) is SQL NULL
+                "max_prev_cos": pa.array(mx, mask=np.isnan(mx)),
+                "is_dup": q >= threshold,
             }
         )
 
-    return tagged.groupBy("centroid_id").applyInPandas(
+    return tagged.groupBy("centroid_id").applyInArrow(
         kernel,
         f"id {id_t}, centroid_id int, cluster_size long, "
         "max_prev_cos double, is_dup boolean",

@@ -6,14 +6,50 @@ buckets only, then exact re-rank). Bulk scoring (per-batch matmuls,
 pair verification) runs in Arrow-batched numpy kernels; one-off
 expressions use the JVM ``zip_with``/``aggregate`` fold. No per-row
 Python anywhere.
+
+The vector kernels here and in ``dedup`` cross the Python boundary as
+Arrow only and decode list columns with :func:`_vectors` (flat value
+buffer, NULLs skipped, float64, dim-checked); :func:`_norms` owns the
+zero-norm cosine convention.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _vectors(arr, dim: int, col: str) -> np.ndarray:
+    """The ``(n_valid, dim)`` float64 matrix of an Arrow list array's
+    non-NULL rows, from its flat value buffer. A row whose length is
+    not ``dim`` raises instead of being spliced into its neighbours."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    for seen in pc.min_max(arr.value_lengths()).values():
+        if seen.is_valid and seen.as_py() != dim:
+            raise ValueError(
+                f"{col}: expected vectors of dim {dim}, "
+                f"got a vector of length {seen.as_py()}"
+            )
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(arr) - arr.null_count, dim)
+
+
+def _norms(M: np.ndarray) -> np.ndarray:
+    """Row L2 norms, zero norms set to 1: a zero vector has cosine 0.0
+    with everything, never NaN (see :func:`cosine_expr`)."""
+    nrm = np.linalg.norm(M, axis=1)
+    nrm[nrm == 0.0] = 1.0
+    return nrm
+
+
+def _centroid_dists(M: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Squared L2 distance to each centroid minus the per-row constant
+    ``||v||^2``: its argmin/argsort is the nearest-centroid order."""
+    return (C * C).sum(axis=1)[None, :] - 2.0 * (M @ C.T)
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -46,32 +82,28 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / F.when(den == 0.0, F.lit(1.0)).otherwise(den)
 
 
-def cosine_udf() -> Column:
+def cosine_udf(dim: int, col: str) -> Column:
     """Arrow-batched float64 cosine kernel for PAIR-VERIFY hot paths
     (candidate verification / re-rank over 10^5+ pairs): higher-order
     Column folds are interpreted per element (~dim lambda steps per
     pair, no codegen) — measured 2.3× slower than one numpy matmul per
     batch at 142k candidate pairs × 64 dims. ``cosine_expr`` remains
     for one-off expressions where a Python worker round-trip isn't
-    warranted."""
+    warranted. Both vectors must have length ``dim`` (``col`` names
+    them in the error)."""
 
-    @F.pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        # NULL vectors yield NULL (np.stack on a ragged/None batch
-        # would throw and kill the job); threshold filters then drop
-        # the pair, matching the JVM expression's NULL propagation
-        mask = a.notna() & b.notna()
-        out = pd.Series([None] * len(a), dtype="float64")
-        if mask.any():
-            A = np.stack(a[mask].to_numpy()).astype("float64")
-            B = np.stack(b[mask].to_numpy()).astype("float64")
-            # zero-norm convention (see cosine_expr): denominator 0
-            # becomes 1, cosine 0.0 — never a NaN that would pass a
-            # >= threshold filter
-            den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            den[den == 0.0] = 1.0
-            out[mask] = (A * B).sum(axis=1) / den
-        return out
+    @F.arrow_udf("double")
+    def _cos(a: pa.Array, b: pa.Array) -> pa.Array:
+        # a NULL side or a NaN cosine (NaN/inf components) yields NULL:
+        # threshold filters drop it and it never ranks first
+        valid = pc.and_(a.is_valid(), b.is_valid())
+        A = _vectors(a.filter(valid), dim, col)
+        B = _vectors(b.filter(valid), dim, col)
+        out = np.full(len(a), np.nan)
+        out[valid.to_numpy(zero_copy_only=False)] = (A * B).sum(axis=1) / (
+            _norms(A) * _norms(B)
+        )
+        return pa.array(out, mask=np.isnan(out))
 
     return _cos
 
@@ -87,69 +119,57 @@ def cosine_topk(
     """Exact top-k cosine neighbors per query (excluding self-matches).
 
     The query matrix (queries ≪ corpus in the ANN regime) ships to every
-    partition inside the Arrow UDF closure; each corpus batch is scored
-    with ONE numpy float64 matmul (vectorized — per-pair Column
+    partition inside the Arrow kernel's closure; each corpus batch is
+    scored with ONE numpy float64 matmul (vectorized — per-pair Column
     expressions interpret higher-order functions per element and are
     ~100× slower), each batch pre-truncates to its local top-k per
     query (map-side combine), and one window takes the global top-k.
     Corpus is scanned once, never shuffled; only ≤ k·|partitions| rows
-    per query reach the exchange."""
-    import pandas as pd
-
-    q_pdf = queries.select(
+    per query reach the exchange. Corpus vectors must have the first
+    query's length."""
+    q_tbl = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).dropna().toPandas()
+    ).dropna().toArrow()
     qt = queries.schema[query_id_col].dataType.simpleString()
     ct = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {qt}, neighbor_id {ct}, cosine double"
-    if not len(q_pdf):
-        # no (non-NULL) queries: an empty top-k frame, not a
-        # np.stack ValueError on the driver
-        return (
-            corpus.sparkSession.createDataFrame([], out_schema)
-            .withColumn("rank", F.lit(0))
-            .select("query_id", "neighbor_id", "rank", "cosine")
+    if not q_tbl.num_rows:
+        # no (non-NULL) queries: an empty top-k frame
+        return corpus.sparkSession.createDataFrame(
+            [], f"query_id {qt}, neighbor_id {ct}, rank int, cosine double"
         )
-    q_ids = np.asarray(q_pdf["query_id"])
-    q_mat = np.stack(q_pdf["qv"].to_numpy()).astype("float64")
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    # engine-wide zero-norm convention (see cosine_expr): a zero-norm
-    # vector has cosine 0.0 with everything — without the guard 0/0
-    # NaNs rank FIRST under F.desc (Spark orders NaN above all
-    # doubles), so a zero query would return arbitrary 'top' neighbors
-    q_norm[q_norm == 0.0] = 1.0
+    q_ids = q_tbl.column("query_id").combine_chunks()
+    qv = q_tbl.column("qv")
+    q_mat = _vectors(qv, len(qv[0]), vec_col)
+    # zero norms → 1: 0/0 NaNs would rank FIRST under F.desc (Spark
+    # orders NaN above all doubles)
+    q_norm = _norms(q_mat)
 
-    def score(iterator):
-        for pdf in iterator:
-            keep = pdf["cv"].notna()
-            pdf = pdf[keep]
-            if not len(pdf):
+    def score(batches):
+        for batch in batches:
+            cv = batch.column(1)
+            c_mat = _vectors(cv, q_mat.shape[1], vec_col)
+            if not len(c_mat):
                 continue
-            ids = pdf["neighbor_id"].to_numpy()
-            c_mat = np.stack(pdf["cv"].to_numpy()).astype("float64")
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            c_norm[c_norm == 0.0] = 1.0
-            sims = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)  # |batch|×|q|
-            frames = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = ids != qid
-                cand_ids, cand = ids[mask], col[mask]
-                if len(cand) > k:
-                    # partial top-k: largest k by (cosine desc, id asc)
-                    order = np.lexsort((cand_ids, -cand))[:k]
-                else:
-                    order = np.lexsort((cand_ids, -cand))
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "neighbor_id": cand_ids[order],
-                            "cosine": cand[order],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+            ids = batch.column(0).filter(cv.is_valid())
+            id_vals = ids.to_numpy(zero_copy_only=False)
+            sims = (c_mat @ q_mat.T) / np.outer(_norms(c_mat), q_norm)  # |batch|×|q|
+            qsel, csel, cos = [], [], []
+            for j, qid in enumerate(q_ids.to_numpy(zero_copy_only=False)):
+                cand = np.flatnonzero(id_vals != qid)
+                # partial top-k: largest k by (cosine desc, id asc)
+                top = cand[np.lexsort((id_vals[cand], -sims[cand, j]))[:k]]
+                qsel.append(np.full(len(top), j))
+                csel.append(top)
+                cos.append(sims[top, j])
+            cos = np.concatenate(cos)
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "query_id": q_ids.take(np.concatenate(qsel)),
+                    "neighbor_id": ids.take(np.concatenate(csel)),
+                    # a NaN cosine (NaN/inf components) is NULL
+                    "cosine": pa.array(cos, mask=np.isnan(cos)),
+                }
+            )
 
     # id columns keep their INPUT types (url strings are the repo's
     # primary entity key — a hardcoded `long` schema would fail the
@@ -159,7 +179,7 @@ def cosine_topk(
     c = spread_small_input(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
     )
-    scored = c.mapInPandas(score, out_schema)
+    scored = c.mapInArrow(score, f"query_id {qt}, neighbor_id {ct}, cosine double")
     return _rank_topk(scored, k)
 
 
@@ -215,7 +235,6 @@ def lsh_bucket_tables(
     √dim — negligible. Input columns pass through with their own
     types (``array<float>`` stays float). NULL vectors get NULL
     ``__bks`` and drop out of candidate generation."""
-    import pyarrow as pa
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     from ballet_spark.cache import spread_small_input
@@ -232,11 +251,8 @@ def lsh_bucket_tables(
         for batch in batches:
             vecs = batch.column(v_idx)
             valid = vecs.is_valid().to_numpy(zero_copy_only=False)
-            n = int(valid.sum())
-            # flatten() skips NULL slots and honours slice offsets
-            M = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            M = M.reshape(n, d)
-            bits = (M @ flat_planes.T > 0).astype(np.int64).reshape(n, L, b)
+            M = _vectors(vecs, d, vec_col)
+            bits = (M @ flat_planes.T > 0).astype(np.int64).reshape(len(M), L, b)
             offs = np.zeros(len(valid) + 1, dtype=np.int32)
             offs[1:] = np.cumsum(valid * L)
             bks = pa.ListArray.from_arrays(
@@ -279,14 +295,12 @@ def cosine_topk_lsh(
     0.95 vs the exact :func:`cosine_topk` on the fixture)."""
     planes = srp_planes(dim, n_planes, n_tables, seed)
     cb = lsh_bucket_tables(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        "cv", dim, n_planes, n_tables, seed, planes=planes,
+        corpus.select(F.col(id_col).alias("neighbor_id"), vec_col),
+        vec_col, dim, n_planes, n_tables, seed, planes=planes,
     ).select("neighbor_id", "tbl", "bucket")
     qb = lsh_bucket_tables(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "qv", dim, n_planes, n_tables, seed, planes=planes,
+        queries.select(F.col(query_id_col).alias("query_id"), vec_col),
+        vec_col, dim, n_planes, n_tables, seed, planes=planes,
     ).select("query_id", "tbl", "bucket")
     # distinct candidate ids FIRST (a pair found by several tables is
     # scored once), then join vectors back: one linear shuffle on the
@@ -319,7 +333,7 @@ def cosine_topk_lsh(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_udf()(F.col("qv"), F.col("cv")).alias("cosine"),
+            cosine_udf(dim, vec_col)(F.col("qv"), F.col("cv")).alias("cosine"),
         )
     )
     return _rank_topk(scored, k)
@@ -342,7 +356,7 @@ def ivf_fit(
     seeds are the ``n_centroids`` corpus vectors with the smallest
     md5(id) (a fixed pseudo-random-but-reproducible draw), then
     ``n_iter`` rounds of assign+partial-sum fused into ONE
-    ``mapInPandas`` pass (a numpy matmul per Arrow batch against
+    ``mapInArrow`` pass (a numpy matmul per Arrow batch against
     broadcast centroids, per-partition (count, vector-sum) partials
     accumulated in the kernel), merged on the driver. The plan is
     **dimension-independent** — k·n_partitions small rows collected
@@ -351,93 +365,88 @@ def ivf_fit(
     Lloyd round). The fit samples at most ``sample_limit`` vectors
     (hash-ordered, deterministic) — centroid quality needs a sample,
     not the corpus, so fit cost is O(sample) regardless of corpus
-    size; ASSIGNMENT (ivf_assign) streams the full corpus once."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
+    size; ASSIGNMENT (ivf_assign) streams the full corpus once. Every
+    vector must have the first seed's length."""
     seed_rows = (
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
         .where(F.col(vec_col).isNotNull())
         .orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
         .limit(int(sample_limit))
     ).persist()
-    seeds = [r["v"] for r in seed_rows.limit(n_centroids).collect()]
-    if not seeds:
-        raise ValueError(
-            "ivf_fit: corpus has no non-NULL embeddings to seed centroids"
-        )
-    cents = np.stack(seeds).astype("float64")
-    k, dim = cents.shape
-
-    for _ in range(n_iter):
-        parts = (
-            seed_rows.select("v")
-            .mapInPandas(_partial_sums_fn(cents), "c int, n long, s array<double>")
-            .collect()
-        )
-        tot_n = np.zeros(k, dtype=np.int64)
-        tot_s = np.zeros((k, dim), dtype=np.float64)
-        for r in parts:
-            tot_n[r["c"]] += r["n"]
-            tot_s[r["c"]] += np.asarray(r["s"], dtype=np.float64)
-        new = cents.copy()  # empty clusters keep their previous centroid
-        nz = np.nonzero(tot_n)[0]
-        new[nz] = tot_s[nz] / tot_n[nz, None]
-        cents = new
-    seed_rows.unpersist()
+    try:
+        seeds = seed_rows.limit(n_centroids).toArrow().column("v")
+        if not len(seeds):
+            raise ValueError(
+                "ivf_fit: corpus has no non-NULL embeddings to seed centroids"
+            )
+        cents = _vectors(seeds, len(seeds[0]), vec_col)
+        k, dim = cents.shape
+        for _ in range(n_iter):
+            parts = (
+                seed_rows.select("v")
+                .mapInArrow(
+                    _partial_sums_fn(cents, vec_col), "c int, n long, s array<double>"
+                )
+                .toArrow()
+            )
+            tot_n = np.zeros(k, dtype=np.int64)
+            tot_s = np.zeros((k, dim), dtype=np.float64)
+            # unbuffered, in collect order: the same float sums as a
+            # row-by-row merge
+            c = parts.column("c").to_numpy()
+            np.add.at(tot_n, c, parts.column("n").to_numpy())
+            np.add.at(tot_s, c, _vectors(parts.column("s"), dim, "s"))
+            new = cents.copy()  # empty clusters keep their previous centroid
+            nz = np.nonzero(tot_n)[0]
+            new[nz] = tot_s[nz] / tot_n[nz, None]
+            cents = new
+    finally:
+        seed_rows.unpersist()
     return cents
 
 
-def _partial_sums_fn(cents):
-    """mapInPandas kernel: assign every vector in the partition to its
+def _partial_sums_fn(cents, col: str):
+    """mapInArrow kernel: assign every vector in the partition to its
     nearest centroid and emit per-centroid (count, vector-sum)
     partials — the map-side combine of Lloyd's M-step, hand-fused so
     the shuffle/collect is k rows per partition regardless of dim."""
-    import numpy as np
-
     C = np.asarray(cents, dtype=np.float64)
     k, dim = C.shape
-    c_sq = (C * C).sum(axis=1)
 
     def fn(batches):
         n = np.zeros(k, dtype=np.int64)
         s = np.zeros((k, dim), dtype=np.float64)
-        for pdf in batches:
-            vs = pdf["v"][pdf["v"].notna()]  # NULL vectors carry no mass
-            if not len(vs):
-                continue
-            M = np.stack(vs.to_numpy()).astype(np.float64)
-            a = np.argmin(c_sq[None, :] - 2.0 * (M @ C.T), axis=1)
+        for batch in batches:
+            M = _vectors(batch.column(0), dim, col)  # NULLs carry no mass
+            a = np.argmin(_centroid_dists(M, C), axis=1)
             np.add.at(n, a, 1)
             np.add.at(s, a, M)
         nz = np.nonzero(n)[0]
-        yield pd.DataFrame(
-            {"c": nz.astype("int32"), "n": n[nz], "s": [s[i] for i in nz]}
+        yield pa.RecordBatch.from_pydict(
+            {
+                "c": pa.array(nz, pa.int32()),
+                "n": n[nz],
+                "s": pa.array(list(s[nz]), pa.list_(pa.float64())),
+            }
         )
 
     return fn
 
 
-def _assign_udf(cents):
-    """Nearest-centroid id by squared L2 — one numpy matmul per batch."""
-    import numpy as np
-
+def _assign_udf(cents, col: str):
+    """Nearest-centroid id by squared L2 — one numpy matmul per batch;
+    a NULL vector assigns to NULL (excluded from any list)."""
     C = np.asarray(cents, dtype=np.float64)  # (k, dim)
-    c_sq = (C * C).sum(axis=1)
 
-    def _kernel(vs: pd.Series) -> pd.Series:
-        # NULL embeddings assign to NULL (excluded from any list)
-        # rather than np.stack killing the job on a ragged batch
-        mask = vs.notna()
-        out = pd.Series([None] * len(vs), dtype="Int32")
-        if mask.any():
-            M = np.stack(vs[mask].to_numpy()).astype(np.float64)  # (n, dim)
-            # ||v-c||^2 = ||v||^2 - 2 v.c + ||c||^2 ; ||v||^2 constant per row
-            d = c_sq[None, :] - 2.0 * (M @ C.T)
-            out[mask] = np.argmin(d, axis=1).astype("int32")
-        return out
+    @F.arrow_udf("int")
+    def _kernel(vs: pa.Array) -> pa.Array:
+        valid = vs.is_valid().to_numpy(zero_copy_only=False)
+        M = _vectors(vs, C.shape[1], col)
+        out = np.zeros(len(vs), dtype=np.int32)
+        out[valid] = np.argmin(_centroid_dists(M, C), axis=1)
+        return pa.array(out, mask=~valid)
 
-    return F.pandas_udf(_kernel, "int")
+    return _kernel
 
 
 def ivf_assign(
@@ -453,7 +462,7 @@ def ivf_assign(
     by centroid_id, where an injected exchange is pure overhead
     (measured +0.18s at sf1.0); shuffle-free consumers (ivf_topk's
     broadcast probe) spread the corpus at the call site instead."""
-    return corpus.withColumn(out_col, _assign_udf(cents)(F.col(vec_col)))
+    return corpus.withColumn(out_col, _assign_udf(cents, vec_col)(F.col(vec_col)))
 
 
 def ivf_topk(
@@ -473,36 +482,32 @@ def ivf_topk(
     pre-assigned/pre-partitioned), the (query, probed centroid) table
     is tiny and BROADCAST, so candidates = one broadcast-hash join +
     re-rank — no corpus shuffle. Recall is tuned by ``n_probe``
-    (candidates ≈ corpus · n_probe / n_centroids)."""
-    import numpy as np
-
+    (candidates ≈ corpus · n_probe / n_centroids). Corpus and query
+    vectors must have the centroids' length."""
     C = np.asarray(cents, dtype=np.float64)
-    q_pdf = queries.select(
+    dim = C.shape[1]
+    q_tbl = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    ).dropna().toPandas()
-    if not len(q_pdf):
-        # no (non-NULL) queries → empty top-k frame, not a driver
-        # np.stack ValueError
-        qt = queries.schema[query_id_col].dataType.simpleString()
+    ).dropna().toArrow()
+    qt = queries.schema[query_id_col].dataType.simpleString()
+    if not q_tbl.num_rows:
+        # no (non-NULL) queries → empty top-k frame
         ct = corpus.schema[id_col].dataType.simpleString()
         return corpus.sparkSession.createDataFrame(
             [], f"query_id {qt}, neighbor_id {ct}, rank int, cosine double"
         )
-    Q = np.stack(q_pdf["qv"].to_numpy()).astype("float64")
-    d = (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T)
+    Q = _vectors(q_tbl.column("qv"), dim, vec_col)
     # stable sort: distance ties break on centroid id, so the probe set
     # is engine-replayable (ORDER BY d2 ASC, c ASC in the SQL oracle)
-    probes = np.argsort(d, axis=1, kind="stable")[:, :n_probe]  # (nq, n_probe)
+    probes = np.argsort(_centroid_dists(Q, C), axis=1, kind="stable")[:, :n_probe]
     # native-Python values + the queries frame's own id dtype (string
     # ids are first-class; int(qid) would crash on them)
     probe_rows = [
         (qid, int(c))
-        for qid, row in zip(q_pdf["query_id"].tolist(), probes)
+        for qid, row in zip(q_tbl.column("query_id").to_pylist(), probes)
         for c in row
     ]
-    spark = corpus.sparkSession
-    qt = queries.schema[query_id_col].dataType.simpleString()
-    probe_df = spark.createDataFrame(
+    probe_df = corpus.sparkSession.createDataFrame(
         probe_rows, f"query_id {qt}, centroid_id int"
     )
 
@@ -513,12 +518,10 @@ def ivf_topk(
     # assignment kernel for us)
     tagged = ivf_assign(
         spread_small_input(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-            )
+            corpus.select(F.col(id_col).alias("neighbor_id"), vec_col)
         ),
         C,
-        vec_col="cv",
+        vec_col=vec_col,
     )
     cand = tagged.join(F.broadcast(probe_df), "centroid_id").filter(
         F.col("query_id") != F.col("neighbor_id")
@@ -533,6 +536,6 @@ def ivf_topk(
     ).select(
         "query_id",
         "neighbor_id",
-        cosine_udf()(F.col("qv"), F.col("cv")).alias("cosine"),
+        cosine_udf(dim, vec_col)(F.col("qv"), F.col(vec_col)).alias("cosine"),
     )
     return _rank_topk(scored, k)

@@ -431,54 +431,6 @@ def test_dedup_lines_rejects_output_reserved_columns(spark):
     assert len(out.columns) == len(set(out.columns))  # no dup names
 
 
-def test_semantic_dedup_zero_norm_embedding(spark):
-    """A zero-norm embedding must score cosine 0.0 (never NaN) and the
-    DuckDB oracle's CASE guard must agree row for row."""
-    import duckdb
-
-    from ballet_spark.operators.dedup import semantic_dedup
-
-    rows = [
-        (1, [1.0, 0.0]),
-        (2, [0.0, 0.0]),   # zero vector, same cluster as id 1
-        (3, [1.0, 0.001]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = np.array([[1.0, 0.0]])  # single centroid: everyone together
-    out = semantic_dedup(df, cents, threshold=0.9).toPandas()
-    out = out.sort_values("id").reset_index(drop=True)
-    z = out[out["id"] == 2].iloc[0]
-    assert z["max_prev_cos"] == 0.0 and not z["is_dup"]
-    assert not out["max_prev_cos"].iloc[1:].isna().any()
-    con = duckdb.connect()
-    oracle = con.execute(
-        """
-        WITH e AS (SELECT * FROM (VALUES
-            (1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 0.001])
-        ) t(id, v)),
-        mx AS (
-            SELECT b.id,
-                   max(CASE WHEN list_dot_product(a.v, a.v) = 0
-                              OR list_dot_product(b.v, b.v) = 0
-                            THEN 0.0
-                            ELSE list_cosine_similarity(a.v, b.v) END) AS m
-            FROM e a JOIN e b ON a.id < b.id GROUP BY b.id)
-        SELECT e.id,
-               sign(mx.m) * floor(abs(mx.m) * 1000000 + 0.5) / 1000000 AS q
-        FROM e LEFT JOIN mx ON mx.id = e.id ORDER BY e.id
-        """
-    ).fetchall()
-    def grid(x):  # the shared 1e-6 sign/floor rounding
-        return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
-
-    got = {int(r["id"]): r["max_prev_cos"] for _, r in out.iterrows()}
-    for oid, oq in oracle:
-        if oq is None:
-            assert pd.isna(got[oid])
-        else:
-            assert grid(got[oid]) == pytest.approx(oq, abs=0)
-
-
 def test_chunk_dedup_lockstep_with_newline_tokens(spark):
     """Round-5 review regression: curation_pipeline_v2's step-3 chunks
     are '\\n'-joined and dedup_lines re-splits on '\\n', so tokens must
@@ -552,24 +504,6 @@ def test_whitespace_only_docs_and_exact_simhash_band(spark):
         assert len(pairs) == 1, (mh, pairs)
 
 
-def test_zero_norm_vectors_are_not_neardups(spark):
-    """Round-5 review: 0/0 cosine is NaN and Spark evaluates
-    NaN >= threshold as TRUE, so two zero embeddings (which share
-    every SRP bucket) were reported as near-duplicates. The engine
-    convention is zero-norm => cosine 0.0 (as in semantic_dedup)."""
-    from ballet_spark.operators.dedup import embedding_neardup_pairs
-
-    vecs = spark.createDataFrame(
-        [(1, [0.0] * 8), (2, [0.0] * 8), (3, [1.0] * 8), (4, [1.0] * 8)],
-        "vec_id long, embedding array<double>",
-    )
-    for exact in (False, True):
-        pairs = embedding_neardup_pairs(
-            vecs, dim=8, threshold=0.95, exact=exact
-        ).collect()
-        assert all({r["id_a"], r["id_b"]} == {3, 4} for r in pairs), pairs
-
-
 def test_incremental_exact_dedup_null_text_across_batches(spark):
     """Round-5 review: md5(NULL) is NULL and NULL keys never match the
     anti-join, so every batch re-admitted one NULL-text row forever —
@@ -592,39 +526,6 @@ def test_decontaminate_reserved_names(spark):
     for bad in ("n_contaminated_grams", "contaminated", "__toks"):
         with pytest.raises(ValueError, match="reserves"):
             decontaminate(df.withColumn(bad, F.lit(1)), df)
-
-
-def test_similarity_null_and_zero_vectors(spark):
-    """Round-5 review: NULL embeddings crashed every np.stack kernel
-    (bucket/assign/partial-sums/cosine_topk) and zero-norm queries
-    ranked NaN cosines FIRST under desc ordering."""
-    import numpy as np
-
-    from ballet_spark.operators.dedup import semantic_dedup
-    from ballet_spark.operators.similarity import (
-        cosine_topk,
-        ivf_assign,
-        ivf_fit,
-        lsh_bucket_tables,
-    )
-
-    vecs = spark.createDataFrame(
-        [(1, [0.0] * 8), (2, None), (3, [1.0] * 8), (4, [0.9] * 8)],
-        "vec_id long, embedding array<double>",
-    )
-    out = cosine_topk(vecs, vecs, k=2).collect()
-    assert out and all(r["cosine"] == r["cosine"] for r in out)  # no NaN
-    # empty / all-NULL queries yield an empty frame, not a ValueError
-    assert cosine_topk(
-        vecs, spark.createDataFrame([], "vec_id long, embedding array<double>"), k=2
-    ).count() == 0
-    cents = ivf_fit(vecs, n_centroids=2, n_iter=1)
-    assert (
-        ivf_assign(vecs, cents).where(F.col("vec_id") == 2).first()["centroid_id"]
-        is None
-    )
-    assert lsh_bucket_tables(vecs, dim=8).where(F.col("vec_id") == 2).count() == 0
-    assert semantic_dedup(vecs, np.stack([[1.0] * 8])).count() == 3
 
 
 def test_salted_agg_reserved_names_and_topk_zero(spark, webtext_df):

@@ -7,6 +7,7 @@ SEMANTICS: boundary arithmetic, partitioning invariance, determinism,
 and error contracts."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -352,3 +353,51 @@ def test_semantic_dedup_hot_cluster_guard(spark):
         semantic_dedup(df, cents, max_cluster=5).collect()
     # under the cap: runs fine
     assert semantic_dedup(df, cents, max_cluster=100).count() == 10
+
+
+def test_semantic_dedup_zero_norm_embedding(spark):
+    """A zero-norm embedding must score cosine 0.0 (never NaN) and the
+    DuckDB oracle's CASE guard must agree row for row."""
+    import duckdb
+
+    from ballet_spark.operators.dedup import semantic_dedup
+
+    rows = [
+        (1, [1.0, 0.0]),
+        (2, [0.0, 0.0]),   # zero vector, same cluster as id 1
+        (3, [1.0, 0.001]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = np.array([[1.0, 0.0]])  # single centroid: everyone together
+    out = semantic_dedup(df, cents, threshold=0.9).toPandas()
+    out = out.sort_values("id").reset_index(drop=True)
+    z = out[out["id"] == 2].iloc[0]
+    assert z["max_prev_cos"] == 0.0 and not z["is_dup"]
+    assert not out["max_prev_cos"].iloc[1:].isna().any()
+    con = duckdb.connect()
+    oracle = con.execute(
+        """
+        WITH e AS (SELECT * FROM (VALUES
+            (1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 0.001])
+        ) t(id, v)),
+        mx AS (
+            SELECT b.id,
+                   max(CASE WHEN list_dot_product(a.v, a.v) = 0
+                              OR list_dot_product(b.v, b.v) = 0
+                            THEN 0.0
+                            ELSE list_cosine_similarity(a.v, b.v) END) AS m
+            FROM e a JOIN e b ON a.id < b.id GROUP BY b.id)
+        SELECT e.id,
+               sign(mx.m) * floor(abs(mx.m) * 1000000 + 0.5) / 1000000 AS q
+        FROM e LEFT JOIN mx ON mx.id = e.id ORDER BY e.id
+        """
+    ).fetchall()
+    def grid(x):  # the shared 1e-6 sign/floor rounding
+        return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
+
+    got = {int(r["id"]): r["max_prev_cos"] for _, r in out.iterrows()}
+    for oid, oq in oracle:
+        if oq is None:
+            assert pd.isna(got[oid])
+        else:
+            assert grid(got[oid]) == pytest.approx(oq, abs=0)

@@ -319,6 +319,26 @@ def test_ivf_probe_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_vector_queries_cross_python_as_arrow_only(spark):
+    """The vector stack's kernels take Arrow batches, never pandas
+    frames; semantic_dedup scores its clusters in ONE grouped Arrow
+    apply."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    for name in (
+        "embedding_topk",
+        "embedding_lsh_topk",
+        "embedding_ivf_fixed_topk",
+        "semantic_dedup_docs",
+    ):
+        plan = _plan(qs[name](spark, "/root/testdata/sf0.001"))
+        for node in ("MapInPandas", "FlatMapGroupsInPandas"):
+            assert node not in plan, (name, node)
+        if name == "semantic_dedup_docs":
+            assert plan.count("FlatMapGroupsInArrow") == 1
+
+
 def test_gopher_filter_is_shuffle_free_map(spark, pages_parquet):
     """The curation gate is a pure map over the scan: no Exchange, no
     Join, no Python evaluator — it must run at input-scan speed."""

@@ -9,6 +9,8 @@
 
 import numpy as np
 import pandas as pd
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from ballet_spark.operators.dedup import embedding_neardup_pairs
@@ -209,3 +211,139 @@ def test_similarity_accepts_string_ids(spark):
     ivf = ivf_topk(df, queries, cents, k=3, n_probe=4)
     assert ivf.schema["query_id"].dataType.simpleString() == "string"
     assert ivf.count() == 9
+
+
+def test_zero_norm_vectors_are_not_neardups(spark):
+    """Round-5 review: 0/0 cosine is NaN and Spark evaluates
+    NaN >= threshold as TRUE, so two zero embeddings (which share
+    every SRP bucket) were reported as near-duplicates. The engine
+    convention is zero-norm => cosine 0.0 (as in semantic_dedup)."""
+    from ballet_spark.operators.dedup import embedding_neardup_pairs
+
+    vecs = spark.createDataFrame(
+        [(1, [0.0] * 8), (2, [0.0] * 8), (3, [1.0] * 8), (4, [1.0] * 8)],
+        "vec_id long, embedding array<double>",
+    )
+    for exact in (False, True):
+        pairs = embedding_neardup_pairs(
+            vecs, dim=8, threshold=0.95, exact=exact
+        ).collect()
+        assert all({r["id_a"], r["id_b"]} == {3, 4} for r in pairs), pairs
+
+
+def test_similarity_null_and_zero_vectors(spark):
+    """Round-5 review: NULL embeddings crashed every np.stack kernel
+    (bucket/assign/partial-sums/cosine_topk) and zero-norm queries
+    ranked NaN cosines FIRST under desc ordering."""
+    import numpy as np
+
+    from ballet_spark.operators.dedup import semantic_dedup
+    from ballet_spark.operators.similarity import (
+        cosine_topk,
+        ivf_assign,
+        ivf_fit,
+        lsh_bucket_tables,
+    )
+
+    vecs = spark.createDataFrame(
+        [(1, [0.0] * 8), (2, None), (3, [1.0] * 8), (4, [0.9] * 8)],
+        "vec_id long, embedding array<double>",
+    )
+    out = cosine_topk(vecs, vecs, k=2).collect()
+    assert out and all(r["cosine"] == r["cosine"] for r in out)  # no NaN
+    # empty / all-NULL queries yield an empty frame, not a ValueError
+    assert cosine_topk(
+        vecs, spark.createDataFrame([], "vec_id long, embedding array<double>"), k=2
+    ).count() == 0
+    cents = ivf_fit(vecs, n_centroids=2, n_iter=1)
+    assert (
+        ivf_assign(vecs, cents).where(F.col("vec_id") == 2).first()["centroid_id"]
+        is None
+    )
+    assert lsh_bucket_tables(vecs, dim=8).where(F.col("vec_id") == 2).count() == 0
+    assert semantic_dedup(vecs, np.stack([[1.0] * 8])).count() == 3
+
+
+def test_ragged_vectors_are_rejected(spark):
+    """A vector whose length is not the operator's dim fails with the
+    column, the dim and the length seen: reshaping the flat value
+    buffer would silently splice a 3-vector and a 5-vector into two
+    4-vectors and score them."""
+    from ballet_spark.operators.similarity import lsh_bucket_tables
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    msg = r"embedding: expected vectors of dim 4, got a vector of length [35]"
+    with pytest.raises(PythonException, match=msg):
+        embedding_neardup_pairs(
+            df, dim=4, threshold=-1.0, n_planes=1, n_tables=1
+        ).collect()
+    with pytest.raises(PythonException, match=msg):
+        lsh_bucket_tables(df, dim=4, n_planes=1, n_tables=1).collect()
+
+
+def test_ivf_fit_releases_its_sample_on_error(spark):
+    """The persisted fit sample is released when the fit fails, not
+    only when it succeeds."""
+    from ballet_spark.operators.similarity import ivf_fit
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    df = spark.createDataFrame(
+        [(1, None), (2, None)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="no non-NULL embeddings"):
+        ivf_fit(df, n_centroids=2)
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_cosine_float_recipe_is_exact_across_split_batches(spark):
+    """Every reported cosine is the float64 dot of the two vectors
+    divided ONCE by the product of their norms, a zero norm counting
+    as 1, bit for bit, while 7-row Arrow batches split every kernel's
+    input. Small-integer components keep each dot exact whatever the
+    summation order, so any other recipe (float32 math, normalising
+    each vector first, another zero guard) changes a bit."""
+    from ballet_spark.operators.dedup import semantic_dedup
+    from ballet_spark.operators.similarity import ivf_topk
+
+    rng = np.random.default_rng(11)
+    V = rng.integers(-3, 4, size=(40, 8)).astype(np.float32).astype(np.float64)
+    V[5] = 0.0  # zero vector; vec_id 9 is NULL
+    rows = [(i, None if i == 9 else V[i].tolist()) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = df.filter(F.col("vec_id") < 12)
+    nrm = np.linalg.norm(V, axis=1)
+    nrm[nrm == 0.0] = 1.0
+
+    def ref(i, j):
+        return float((V[i] @ V[j]) / (nrm[i] * nrm[j]))
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for name, out in {
+            "cosine_topk": cosine_topk(df, q, k=5),
+            "cosine_topk_lsh": cosine_topk_lsh(
+                df, q, k=5, dim=8, n_planes=2, n_tables=4
+            ),
+            "ivf_topk": ivf_topk(df, q, V[[0, 1, 2]], k=5, n_probe=2),
+        }.items():
+            got = out.collect()
+            assert got, name
+            for r in got:
+                assert r["cosine"] == ref(r["query_id"], r["neighbor_id"]), (name, r)
+        sd = semantic_dedup(df, V[[0, 1]], threshold=0.5).collect()
+        assert len(sd) == 39
+        members = {}
+        for r in sd:
+            members.setdefault(r["centroid_id"], []).append(r["id"])
+        for r in sd:
+            prev = [j for j in members[r["centroid_id"]] if j < r["id"]]
+            want = max(ref(r["id"], j) for j in prev) if prev else None
+            assert r["max_prev_cos"] == want, r
+    finally:
+        spark.conf.set(key, old)
