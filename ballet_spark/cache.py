@@ -16,6 +16,7 @@ created for other reasons.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _PERSISTED: dict[str, list[DataFrame]] = {}
@@ -56,6 +57,26 @@ def release_caches(scope: str | None = "dedup") -> int:
             except Exception:
                 pass  # session stopped; blocks already gone
     return n
+
+
+def live_caches() -> dict[str, int]:
+    """``{scope: n}``: how many handles registered under each scope are
+    still cached (storage level not ``NONE``). Read-only, and it starts
+    no Spark job: each handle is only looked up in the cache manager.
+    A handle that ``spark.catalog.clearCache()`` evicted, or whose
+    session has stopped, is not counted; scopes with none live are
+    left out."""
+    out = {}
+    for scope, handles in _PERSISTED.items():
+        n = 0
+        for handle in handles:
+            try:
+                n += handle.storageLevel != StorageLevel.NONE
+            except Exception:
+                pass  # session stopped
+        if n:
+            out[scope] = n
+    return out
 
 
 # analyzed-plan nodes that shuffle (or sort) their input: anything

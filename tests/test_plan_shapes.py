@@ -9,6 +9,7 @@ correct."""
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.util import PythonEvalType
 
 from ballet_spark.core import Feature, FeatureEngineeringPipeline
 from ballet_spark.functions.text import char_count, token_count
@@ -21,6 +22,43 @@ from ballet_spark.operators.window_ops import ForwardFill, Lag, Rolling
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+_SCALAR_EVAL_TYPES = frozenset({
+    PythonEvalType.SQL_BATCHED_UDF,
+    PythonEvalType.SQL_ARROW_BATCHED_UDF,
+    PythonEvalType.SQL_SCALAR_PANDAS_UDF,
+    PythonEvalType.SQL_SCALAR_PANDAS_ITER_UDF,
+    PythonEvalType.SQL_SCALAR_ARROW_UDF,
+    PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF,
+})
+
+
+def _scalar_udf_eval_types(df) -> list[int]:
+    """``evalType`` of every scalar ``PythonUDF`` expression in the
+    analyzed plan (map and grouped kernels, which are ``PythonUDF``
+    expressions too, are left out). The executed plan prints a pandas
+    and an Arrow scalar UDF alike (both ``ArrowEvalPython``); the eval
+    type tells them apart: 200 = ``SQL_SCALAR_PANDAS_UDF``, 250 =
+    ``SQL_SCALAR_ARROW_UDF``."""
+    out = []
+    nodes = [df._jdf.queryExecution().analyzed()]
+    while nodes:
+        node = nodes.pop()
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+        exprs = node.expressions()
+        todo = [exprs.apply(i) for i in range(exprs.size())]
+        while todo:
+            expr = todo.pop()
+            if (
+                expr.nodeName() == "PythonUDF"
+                and expr.evalType() in _SCALAR_EVAL_TYPES
+            ):
+                out.append(expr.evalType())
+            kids = expr.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -337,6 +375,26 @@ def test_vector_queries_cross_python_as_arrow_only(spark):
             assert node not in plan, (name, node)
         if name == "semantic_dedup_docs":
             assert plan.count("FlatMapGroupsInArrow") == 1
+
+
+def test_vector_scalar_udfs_are_arrow_udfs(spark):
+    """Every scalar kernel of the vector queries is an ``arrow_udf``,
+    not a ``pandas_udf``; the helper does see a pandas scalar UDF where
+    one is left (``lang_id_heuristic``)."""
+    import __spark_entry__ as entry
+    from test_entry_oracle import SF_DIR
+
+    qs = entry.queries()
+    for name in (
+        "embedding_lsh_topk",
+        "embedding_ivf_fixed_topk",
+        "semantic_dedup_docs",
+    ):
+        types = _scalar_udf_eval_types(qs[name](spark, SF_DIR))
+        assert types, name
+        assert set(types) == {PythonEvalType.SQL_SCALAR_ARROW_UDF}, (name, types)
+    types = _scalar_udf_eval_types(qs["lang_id_heuristic"](spark, SF_DIR))
+    assert PythonEvalType.SQL_SCALAR_PANDAS_UDF in types, types
 
 
 def test_gopher_filter_is_shuffle_free_map(spark, pages_parquet):
