@@ -25,8 +25,9 @@ _SHIPPED = set()
 def _ensure_shipped(spark: SparkSession) -> None:
     """The driver may hand us ITS OWN SparkSession (not built by
     ballet_spark.session.get_spark), in which case the package was
-    never shipped to executor Python workers — pandas-UDF queries
-    would fail with ModuleNotFoundError. Ship once per session.
+    never shipped to executor Python workers — every query with a
+    Python kernel would fail with ModuleNotFoundError. Ship once per
+    session.
 
     Keyed on applicationId, not ``id(sparkContext)`` — after a
     stop/start cycle CPython can hand the freed object's id to the new
@@ -428,7 +429,7 @@ def quality_scores(spark, sf_dir):
 
 
 def lang_id_heuristic(spark, sf_dir):
-    """Stopword-voting language ID (n-gram heuristic, pandas kernel)."""
+    """Stopword-voting language ID (n-gram heuristic, Arrow kernel)."""
     from ballet_spark.functions.text import lang_id_col
 
     from ballet_spark.cache import spread_small_input
@@ -807,7 +808,7 @@ def embedding_lsh_topk(spark, sf_dir):
 
 
 def doc_fingerprints(spark, sf_dir):
-    """Rolling-hash winnowing fingerprint (pandas kernel): min over all
+    """Rolling-hash winnowing fingerprint (Arrow kernel): min over all
     8-byte windows of the polynomial hash Σ byte·B^j mod 2^61-1. The
     oracle replays the polynomial per window in DuckDB HUGEINT
     arithmetic (the corpus is ASCII, so unicode(char) == utf-8 byte)."""
@@ -1605,7 +1606,7 @@ def salted_rolling_stats(spark, sf_dir):
 def lm_perplexity_docs(spark, sf_dir):
     """Char-bigram LM perplexity scoring over the documents corpus
     (functions/lm.py) — the CCNet-style quality gate: fit = one
-    bounded-output mapInPandas count pass + tiny merge, score = exact
+    bounded-output mapInArrow count pass + tiny merge, score = exact
     int64 microunit sums under a broadcast 130×129 table, so any
     partitioning equals the SQL oracle's per-bigram replay. ln runs
     once per TABLE ENTRY (quantized to 1e-6 before scoring), never per
@@ -1865,7 +1866,7 @@ def nb_classifier_docs(spark, sf_dir):
     """Hashed-token Naive-Bayes quality/domain classifier
     (functions/classifier.py) — the fastText-style learned gate of
     DCLM/CCNet-class pipelines, fit here to predict lang='en' from
-    hashed word unigrams. Fit = one bounded-output mapInPandas count
+    hashed word unigrams. Fit = one bounded-output mapInArrow count
     pass + tiny merge (one small shuffle regardless of corpus size);
     score = map-only exact int64 microunit sums under a broadcast
     table, so `nb_logodds_q` is partitioning-invariant and equals the

@@ -12,18 +12,18 @@ char-bigram LM (functions/lm.py):
 - **feature hashing**: bucket = first 8 hex digits of md5(token) mod
   ``n_buckets`` — the same engine-portable formula as
   plans/splits.py::hash_bucket.
-- **fit** (:func:`fit_nb_tokens`): one ``mapInPandas`` pass emits
+- **fit** (:func:`fit_nb_tokens`): one ``mapInArrow`` pass emits
   bounded per-batch partial (class, bucket) count matrices, one tiny
   ``groupBy`` merges them — a single small shuffle regardless of
   corpus size. Add-k-smoothed log-probs are quantized ONCE PER TABLE
   ENTRY to the 1e-6 microunit grid (shared floor(x·10^6+0.5) formula);
   class priors ride along at bucket = -1.
-- **score** (:func:`score_nb_tokens`): the bounded table broadcasts
-  into an Arrow kernel; each doc scores with an exact int64 microunit
-  sum — identical under any partitioning, equal to the SQL oracle's
-  per-token sum, and the predicted class falls out of an INTEGER
-  comparison (no float boundary can flip it). Map-only: the corpus is
-  never shuffled to be scored.
+- **score** (:func:`score_nb_tokens`): the bounded table ships inside
+  an ``arrow_udf`` over the text column; each doc scores with an exact
+  int64 microunit sum — identical under any partitioning, equal to the
+  SQL oracle's per-token sum, and the predicted class falls out of an
+  INTEGER comparison (no float boundary can flip it). Map-only: the
+  corpus is never shuffled to be scored.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ import hashlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -89,35 +89,33 @@ def fit_nb_tokens(
     ``ln(docs_cls / docs_total)`` in microunits. NULL-text rows are
     excluded from the fit entirely (they score NULL downstream)."""
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             m = np.zeros((2, n_buckets), dtype=np.int64)
             docs = np.zeros(2, dtype=np.int64)
             cls_parts, tok_parts = [], []
-            for t, y in zip(pdf[text_col], pdf[label_col]):
-                # pd.isna, not `is None`: a nullable int label arrives
-                # in the Arrow batch as a float column whose NULLs are
-                # NaN, which `is None` misses (int(NaN) would raise)
-                if pd.isna(t) or pd.isna(y):
+            texts, labels = (c.to_pylist() for c in batch.columns)
+            for t, y in zip(texts, labels):
+                if t is None or y is None:
                     continue
-                c = int(y)
-                docs[c] += 1
+                docs[y] += 1
                 toks = _tokens(t)
-                cls_parts.append(np.full(len(toks), c, dtype=np.int64))
+                cls_parts.append(np.full(len(toks), y, dtype=np.int64))
                 tok_parts.append(np.array(toks, dtype=object))
             if tok_parts:
                 cls_arr = np.concatenate(cls_parts)
                 buckets = _bucket_array(np.concatenate(tok_parts), n_buckets)
                 np.add.at(m, (cls_arr, buckets), 1)
             nz = np.nonzero(m.ravel())[0]
-            out = pd.DataFrame({"idx": nz, "n": m.ravel()[nz]})
             # doc counts ride along at idx = 2*n_buckets + cls
             dz = np.nonzero(docs)[0]
-            out = pd.concat(
-                [out, pd.DataFrame({"idx": 2 * n_buckets + dz, "n": docs[dz]})],
-                ignore_index=True,
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate([nz, 2 * n_buckets + dz]), type=pa.int64()),
+                    pa.array(np.concatenate([m.ravel()[nz], docs[dz]])),
+                ],
+                ["idx", "n"],
             )
-            yield out
 
     # guide §2/§4: spread a single-small-file corpus before the Arrow
     # count pass (no-op on real multi-split tables)
@@ -130,14 +128,13 @@ def fit_nb_tokens(
                 F.col(label_col).cast("int").alias(label_col),
             )
         )
-        .mapInPandas(partials, "idx long, n long")
+        .mapInArrow(partials, "idx long, n long")
         .groupBy("idx")
         .agg(F.sum("n").alias("n"))
+        .toArrow()  # ≤ 2·n_buckets + 2 rows by construction
     )
-    pdf = counts.toPandas()  # ≤ 2·n_buckets + 2 rows by construction
     m = np.zeros(2 * n_buckets + 2, dtype=np.int64)
-    if len(pdf):
-        m[pdf["idx"].to_numpy()] = pdf["n"].to_numpy()
+    m[counts["idx"].to_numpy()] = counts["n"].to_numpy()
     tok = m[: 2 * n_buckets].reshape(2, n_buckets)
     docs = m[2 * n_buckets :]
     row_n = tok.sum(axis=1, keepdims=True)
@@ -152,7 +149,7 @@ def fit_nb_tokens(
     prior_q = np.floor(np.log(docs / n_total) * Q + 0.5).astype(np.int64)
 
     cls_idx, b_idx = np.meshgrid(np.arange(2), np.arange(n_buckets), indexing="ij")
-    out = pd.DataFrame(
+    table = pa.table(
         {
             "cls": np.concatenate([cls_idx.ravel(), [0, 1]]).astype(np.int32),
             "bucket": np.concatenate([b_idx.ravel(), [-1, -1]]).astype(np.int32),
@@ -161,7 +158,7 @@ def fit_nb_tokens(
         }
     )
     return df.sparkSession.createDataFrame(
-        out, "cls int, bucket int, n long, logp_q long"
+        table, "cls int, bucket int, n long, logp_q long"
     )
 
 
@@ -177,48 +174,45 @@ def score_nb_tokens(
     ``{out_col}_logodds`` (the same as a double: one IEEE division by
     10^6) and ``{out_col}_pred`` (integer sign test). NULL text scores
     NULL/NULL/NULL."""
-    rows = model.select("cls", "bucket", "logp_q").collect()
-    n_buckets = max(r["bucket"] for r in rows) + 1
+    table = model.select("cls", "bucket", "logp_q").toArrow()
+    cls, bucket, logp_q = (table[c].to_numpy() for c in table.column_names)
+    n_buckets = int(bucket.max()) + 1
     lp = np.zeros((2, n_buckets), dtype=np.int64)
     prior = np.zeros(2, dtype=np.int64)
-    for r in rows:
-        if r["bucket"] < 0:
-            prior[r["cls"]] = r["logp_q"]
-        else:
-            lp[r["cls"], r["bucket"]] = r["logp_q"]
+    tok = bucket >= 0
+    lp[cls[tok], bucket[tok]] = logp_q[tok]
+    prior[cls[~tok]] = logp_q[~tok]
     diff = lp[1] - lp[0]
     pdiff = int(prior[1] - prior[0])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lq: list = [None] * len(pdf)
-            pos, tok_parts, n_toks = [], [], []
-            for i, t in enumerate(pdf[text_col]):
-                if pd.isna(t):
-                    continue
-                toks = _tokens(t)
-                pos.append(i)
-                tok_parts.append(np.array(toks, dtype=object))
-                n_toks.append(len(toks))
-            if pos:
-                # one md5-memoized bucket gather for the whole batch,
-                # per-doc exact int64 sums via add.reduceat — the
-                # same whole-batch shape as the LM scorer
-                buckets = _bucket_array(np.concatenate(tok_parts), n_buckets)
-                lens = np.asarray(n_toks, dtype=np.int64)
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                sums = pdiff + np.add.reduceat(diff[buckets], starts)
-                for i, s in zip(pos, sums):
-                    lq[i] = int(s)
-            out = pdf.copy()
-            out[f"{out_col}_logodds_q"] = pd.array(lq, dtype="Int64")
-            yield out
+    @F.arrow_udf("long")
+    def kernel(text: pa.Array) -> pa.Array:
+        col = text.to_pylist()
+        lq: list = [None] * len(col)
+        pos, tok_parts, n_toks = [], [], []
+        for i, t in enumerate(col):
+            if t is None:
+                continue
+            toks = _tokens(t)
+            pos.append(i)
+            tok_parts.append(np.array(toks, dtype=object))
+            n_toks.append(len(toks))
+        if pos:
+            # one md5-memoized bucket gather for the whole batch,
+            # per-doc exact int64 sums via add.reduceat — the
+            # same whole-batch shape as the LM scorer
+            buckets = _bucket_array(np.concatenate(tok_parts), n_buckets)
+            lens = np.asarray(n_toks, dtype=np.int64)
+            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+            sums = pdiff + np.add.reduceat(diff[buckets], starts)
+            for i, s in zip(pos, sums):
+                lq[i] = int(s)
+        return pa.array(lq, type=pa.int64())
 
     from ballet_spark.cache import spread_small_input
 
-    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    scored = spread_small_input(df).mapInPandas(
-        kernel, f"{ddl}, {out_col}_logodds_q long"
+    scored = spread_small_input(df).withColumn(
+        f"{out_col}_logodds_q", kernel(F.col(text_col))
     )
     return scored.withColumn(
         f"{out_col}_logodds", F.col(f"{out_col}_logodds_q") / F.lit(float(Q))

@@ -1,46 +1,50 @@
-"""Text/HTML kernels — vectorized pandas/Arrow UDFs + JVM expressions.
+"""Text/HTML kernels — JVM expressions and Arrow-batched Python UDFs.
 
 Per BASELINE.json input_hint: all text/HTML-derived features are
-computed in vectorized pandas/Arrow UDFs (no per-row Python), and
-simple ones stay JVM-side as Column expressions (whole-stage codegen).
-The reference's free-form per-feature callables (e.g. ``X.str.len()``
-in docs/fragments/feature-engineering-guide-custom-transformer.py) map
-to this module.
+computed batch-wise (no per-row Python UDF calls), and simple ones stay
+JVM-side as Column expressions (whole-stage codegen). The reference's
+free-form per-feature callables (e.g. ``X.str.len()`` in
+docs/fragments/feature-engineering-guide-custom-transformer.py) map to
+this module.
 
-Every pandas kernel is exposed twice:
-- ``*_pdf`` — the plain pandas function, reused verbatim by the pytest
-  oracle (single code path ⇒ byte-identical / allclose by construction);
-- a Spark Column builder wrapping it in ``F.pandas_udf`` (or a pure
-  expression when the semantics are JVM-expressible).
+A kernel that needs Python is a plain function of one value, mapped
+over a column by :func:`_arrow_map`'s ``F.arrow_udf``: only that column
+crosses into Python, as Arrow, and tests call the same function
+directly.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ballet_spark.sources.webtext import extract_text, extract_title
+
+
+def _arrow_map(fn, ddl: str):
+    """Scalar ``F.arrow_udf`` applying ``fn`` to every non-NULL value of
+    one column (NULL stays NULL); the boundary casts the results to the
+    Spark type ``ddl``."""
+
+    @F.arrow_udf(ddl)
+    def _udf(col: pa.Array) -> pa.Array:
+        return pa.array([None if v is None else fn(v) for v in col.to_pylist()])
+
+    return _udf
+
 
 # --------------------------------------------------------------------
 # HTML → text (byte-identical contract)
 # --------------------------------------------------------------------
 
 
-def extract_text_pdf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: extract_text(bytes(b)) if b is not None else None)
-
-
-def extract_title_pdf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: extract_title(bytes(b)) if b is not None else None)
-
-
 def extract_text_col(html: Column) -> Column:
-    return F.pandas_udf(extract_text_pdf, "string")(html)
+    return _arrow_map(extract_text, "string")(html)
 
 
 def extract_title_col(html: Column) -> Column:
-    return F.pandas_udf(extract_title_pdf, "string")(html)
+    return _arrow_map(extract_title, "string")(html)
 
 
 # --------------------------------------------------------------------
@@ -148,7 +152,7 @@ def quality_score(text: Column) -> Column:
 
 
 # --------------------------------------------------------------------
-# Language identification (n-gram/stopword heuristic, pandas kernel)
+# Language identification (n-gram/stopword heuristic, Arrow kernel)
 # --------------------------------------------------------------------
 
 _LANG_MARKERS: dict[str, set[str]] = {
@@ -159,26 +163,20 @@ _LANG_MARKERS: dict[str, set[str]] = {
 }
 
 
-def lang_id_pdf(text: pd.Series) -> pd.Series:
+def lang_id(t: str) -> str:
     """Stopword-voting language ID. Deterministic tie-break: highest
     count wins, then alphabetical language code; no markers ⇒ 'und'."""
-
-    def _one(t):
-        if t is None:
-            return None
-        toks = set(t.lower().split())
-        best_lang, best_n = "und", 0
-        for lang in sorted(_LANG_MARKERS):
-            n = len(toks & _LANG_MARKERS[lang])
-            if n > best_n:
-                best_lang, best_n = lang, n
-        return best_lang
-
-    return text.map(_one)
+    toks = set(t.lower().split())
+    best_lang, best_n = "und", 0
+    for lang in sorted(_LANG_MARKERS):
+        n = len(toks & _LANG_MARKERS[lang])
+        if n > best_n:
+            best_lang, best_n = lang, n
+    return best_lang
 
 
 def lang_id_col(text: Column) -> Column:
-    return F.pandas_udf(lang_id_pdf, "string")(text)
+    return _arrow_map(lang_id, "string")(text)
 
 
 # --------------------------------------------------------------------
@@ -192,41 +190,31 @@ def content_hash(text: Column) -> Column:
     return F.md5(text)
 
 
-def rolling_fingerprint_pdf(text: pd.Series, k: int = 8, mod: int = 2**61 - 1) -> pd.Series:
+def rolling_fingerprint(t: str, k: int = 8, mod: int = 2**61 - 1) -> int:
     """Polynomial rolling-hash fingerprint: min of all k-gram hashes
-    (a winnowing-style document signature). Pure-pandas kernel shared
-    with the oracle."""
+    (a winnowing-style document signature)."""
     B = 1_000_003
-
-    def _one(t):
-        if t is None:
-            return None
-        data = t.encode("utf-8")
-        if len(data) < k:
-            h = 0
-            for ch in data:
-                h = (h * B + ch) % mod
-            return h
-        # rolling window of width k
-        pw = pow(B, k - 1, mod)
+    data = t.encode("utf-8")
+    if len(data) < k:
         h = 0
-        best = None
-        for i, ch in enumerate(data):
-            if i >= k:
-                h = (h - data[i - k] * pw) % mod
+        for ch in data:
             h = (h * B + ch) % mod
-            if i >= k - 1:
-                best = h if best is None or h < best else best
-        return best
-
-    return text.map(_one)
+        return h
+    # rolling window of width k
+    pw = pow(B, k - 1, mod)
+    h = 0
+    best = None
+    for i, ch in enumerate(data):
+        if i >= k:
+            h = (h - data[i - k] * pw) % mod
+        h = (h * B + ch) % mod
+        if i >= k - 1:
+            best = h if best is None or h < best else best
+    return best
 
 
 def rolling_fingerprint_col(text: Column, k: int = 8) -> Column:
-    def _udf(s: pd.Series) -> pd.Series:
-        return rolling_fingerprint_pdf(s, k=k)
-
-    return F.pandas_udf(_udf, "long")(text)
+    return _arrow_map(lambda t: rolling_fingerprint(t, k=k), "long")(text)
 
 
 def tf_idf_top_terms(
@@ -446,8 +434,6 @@ def repetition_metrics(
     replayed exactly by the DuckDB oracle's unnest + GROUP BY."""
     from collections import Counter
 
-    import pandas as pd
-
     import re
 
     # ASCII \s+, matching the Spark-side splits (Java regex) and the
@@ -456,38 +442,34 @@ def repetition_metrics(
     # differently from every other path
     ws = re.compile(r"\s+", re.ASCII)
 
-    def _kernel(text: pd.Series) -> pd.DataFrame:
-        def _one(t):
-            if t is None:
-                return (0.0, 0.0)
-            toks = [w for w in ws.split(t) if w]
+    def _one(t):
+        if t is None:
+            return {"top": 0.0, "dup": 0.0}
+        toks = [w for w in ws.split(t) if w]
 
-            def frac(n, mode):
-                if len(toks) < n:
-                    return 0.0
-                grams = Counter(
-                    tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                )
-                total = sum(grams.values())
-                if mode == "top":
-                    return max(grams.values()) / total
-                dup = sum(c for c in grams.values() if c > 1)
-                return dup / total
+        def frac(n, mode):
+            if len(toks) < n:
+                return 0.0
+            grams = Counter(
+                tuple(toks[i : i + n]) for i in range(len(toks) - n + 1)
+            )
+            total = sum(grams.values())
+            if mode == "top":
+                return max(grams.values()) / total
+            dup = sum(c for c in grams.values() if c > 1)
+            return dup / total
 
-            # RAW fractions — rounding happens in the caller's Spark
-            # expression so both engines round identically (Python
-            # round() is banker's, Spark/DuckDB round half-up)
-            return (frac(top_n, "top"), frac(dup_n, "dup"))
+        # RAW fractions — rounding happens in the caller's Spark
+        # expression so both engines round identically (Python
+        # round() is banker's, Spark/DuckDB round half-up)
+        return {"top": frac(top_n, "top"), "dup": frac(dup_n, "dup")}
 
-        pairs = text.map(_one)
-        # struct return type ⇒ the kernel must yield a DataFrame whose
-        # columns are the struct fields
-        return pd.DataFrame(
-            {"top": pairs.map(lambda p: p[0]), "dup": pairs.map(lambda p: p[1])}
-        )
+    out_type = pa.struct([("top", pa.float64()), ("dup", pa.float64())])
 
-    out_type = "struct<top:double, dup:double>"
-    udf = F.pandas_udf(_kernel, out_type)
+    @F.arrow_udf("struct<top:double, dup:double>")
+    def udf(text: pa.Array) -> pa.Array:
+        return pa.array([_one(t) for t in text.to_pylist()], type=out_type)
+
     base = df.select(*[F.col(c) for c in id_cols], udf(F.col(text_col)).alias("__r"))
     return base.select(
         *[F.col(c) for c in id_cols],

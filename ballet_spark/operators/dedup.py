@@ -2,7 +2,7 @@
 
 Exact (hash-groupBy), n-gram Jaccard (exact, with doc-frequency
 pruning), MinHash+LSH (band-bucket candidate generation + exact
-verify), SimHash (vectorized pandas UDF), n-gram decontamination and
+verify), SimHash (an Arrow UDF), n-gram decontamination and
 embedding-cosine near-dup. No reference analog (ballet has no dedup).
 
 Scale design notes:
@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -221,7 +221,6 @@ def gram_hashes(
     spread first (``cache.spread_small_input``) so the kernel does not
     run on 1-2 tasks."""
     import numpy as np
-    import pyarrow as pa
 
     n = int(shingle_n)
     k = int(num_hashes)
@@ -432,14 +431,14 @@ def minhash_lsh_pairs(
     return _jaccard_verify(cand, hs, hs, threshold)
 
 
-def simhash_pdf(text: pd.Series, bits: int = 64) -> pd.Series:
-    """64-bit SimHash over whitespace tokens (pandas kernel, shared with
-    the pytest oracle). Token hash = first 8 bytes of md5 (big-endian) —
+def simhash(texts: list, bits: int = 64) -> list:
+    """64-bit SimHash over whitespace tokens of each text (``None``
+    stays ``None``). Token hash = first 8 bytes of md5 (big-endian) —
     reproducible in DuckDB as ``('0x' || substr(md5(tok),1,16))::UBIGINT``
     so the driver's SQL oracle can check this end-to-end. The bit-vote
     loop is one numpy matrix op per doc (bit j set ⇔ more than half the
-    tokens have bit j set), with an md5 memo per Arrow batch so repeated
-    tokens hash once."""
+    tokens have bit j set), with an md5 memo per call (one Arrow batch)
+    so repeated tokens hash once."""
     import hashlib
 
     import numpy as np
@@ -468,14 +467,15 @@ def simhash_pdf(text: pd.Series, bits: int = 64) -> pd.Series:
         # to signed int64
         return v - (1 << 64) if v >= (1 << 63) else v
 
-    return text.map(_one)
+    return [_one(t) for t in texts]
 
 
 def simhash_col(text_col):
-    def _udf(text: pd.Series) -> pd.Series:
-        return simhash_pdf(text)
+    @F.arrow_udf("long")
+    def _udf(text: pa.Array) -> pa.Array:
+        return pa.array(simhash(text.to_pylist()), type=pa.int64())
 
-    return F.pandas_udf(_udf, "long")(text_col)
+    return _udf(text_col)
 
 
 def simhash_dup_pairs(
@@ -497,11 +497,15 @@ def simhash_dup_pairs(
     # strip ALL whitespace, not F.trim (spaces only): a '\n'-only doc
     # passed the old trim guard, simhashed to 0, and every pair of such
     # docs came back as a hamming-0 duplicate.
-    sh = df.filter(
-        F.regexp_replace(F.col(text_col), r"\s", "") != ""
-    ).select(
-        F.col(id_col).alias("id"), simhash_col(F.col(text_col)).alias("sh")
+    # persist: both self-join sides read the hashes, and the join's
+    # inferred isnotnull(sh) filter would otherwise be pushed below the
+    # projection as a second call of the kernel on each side
+    sh = persist_tracked(
+        df.filter(F.regexp_replace(F.col(text_col), r"\s", "") != "").select(
+            F.col(id_col).alias("id"), simhash_col(F.col(text_col)).alias("sh")
+        )
     )
+    sh.count()  # eager, so the two sides below race past a cold cache
     banded = sh.select(
         "id",
         "sh",
@@ -658,7 +662,6 @@ def embedding_neardup_pairs(
         batches: the trailing group of every batch is carried into the
         next one and scored once its end is seen (or at the end of the
         partition). Memory: one batch plus one carried group."""
-        import pyarrow as pa
 
         carry = None  # the trailing group seen so far, not yet scored
         for batch in itertools.chain(batches, [None]):
@@ -1188,7 +1191,6 @@ def semantic_dedup(
     more centroids (size k with :func:`semdedup_auto_k` so expected
     cluster size stays constant as the corpus grows)."""
     import numpy as np
-    import pyarrow as pa
 
     from ballet_spark.operators.similarity import _norms, _vectors, ivf_assign
 
@@ -1313,8 +1315,9 @@ def dedup_substrings(
     ``count > 1`` BEFORE the join back, so the probe join touches
     only occurrences of actually-repeated windows (AQE skew-join
     splits residual hot fingerprints). Removal positions funnel into
-    one groupBy(id) — linear — and the text rebuild is a single
-    Arrow-batched kernel doing an O(n) numpy difference-array per doc.
+    one groupBy(id) — linear — and the text rebuild is one
+    ``arrow_udf`` over (tokens, removed positions) doing an O(n) numpy
+    difference-array per doc; the other columns never enter Python.
     Three linear shuffles total; no quadratic term, no driver collect.
     When the input arrives in fewer partitions than the cluster has
     cores (a single small file — the CI shape; a 100 TB table arrives
@@ -1333,7 +1336,7 @@ def dedup_substrings(
     k = int(k)
     out_col = out_col or text_col
     for c in (
-        "__toks", "__h", "__pos", "__w", "__rem", "__id",
+        "__toks", "__h", "__pos", "__w", "__rem", "__id", "__r",
         "__cleaned", "__nrem", "n_removed_tokens",
     ):
         if c in df.columns:
@@ -1363,8 +1366,6 @@ def dedup_substrings(
 
     def _win_rows(batches):
         import hashlib
-
-        import pyarrow as pa
 
         for batch in batches:
             ids = batch.column(0)
@@ -1427,48 +1428,38 @@ def dedup_substrings(
     )
     joined = base.join(rems, F.col(id_col) == rems["__id"], "left").drop("__id")
 
-    def rebuild(it):
-        for pdf in it:
-            cleaned, removed = [], []
-            for tk, rem in zip(pdf["__toks"], pdf["__rem"]):
-                if tk is None or len(tk) == 0:
-                    cleaned.append("")
-                    removed.append(0)
-                    continue
-                n = len(tk)
-                if rem is None or len(rem) == 0:
-                    cleaned.append(" ".join(tk))
-                    removed.append(0)
-                    continue
-                pos = np.asarray(rem, dtype=np.int64)
-                diff = np.zeros(n + 1, dtype=np.int64)
-                np.add.at(diff, pos, 1)
-                np.add.at(diff, np.minimum(pos + k, n), -1)
-                cov = np.cumsum(diff)[:n] > 0
-                arr = np.asarray(tk, dtype=object)
-                cleaned.append(" ".join(arr[~cov]))
-                removed.append(int(cov.sum()))
-            out = pdf.drop(columns=["__toks", "__rem"])
-            out["__cleaned"] = cleaned
-            out["__nrem"] = np.asarray(removed, dtype=np.int64)
-            yield out
+    out_type = pa.struct([("__cleaned", pa.string()), ("__nrem", pa.int64())])
 
-    schema_parts = [
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema
-    ]
-    schema = ", ".join(schema_parts + ["__cleaned string", "__nrem long"])
-    rebuilt = joined.select(*df.columns, "__toks", "__rem").mapInPandas(
-        rebuild, schema
+    @F.arrow_udf("struct<__cleaned:string, __nrem:bigint>")
+    def rebuild(toks: pa.Array, rems: pa.Array) -> pa.Array:
+        out = []
+        for tk, rem in zip(toks.to_pylist(), rems.to_pylist()):
+            if not tk or not rem:  # NULL text rebuilds as ''
+                out.append({"__cleaned": " ".join(tk or []), "__nrem": 0})
+                continue
+            n = len(tk)
+            pos = np.asarray(rem, dtype=np.int64)
+            diff = np.zeros(n + 1, dtype=np.int64)
+            np.add.at(diff, pos, 1)
+            np.add.at(diff, np.minimum(pos + k, n), -1)
+            cov = np.cumsum(diff)[:n] > 0
+            arr = np.asarray(tk, dtype=object)
+            out.append({"__cleaned": " ".join(arr[~cov]), "__nrem": int(cov.sum())})
+        return pa.array(out, type=out_type)
+
+    rebuilt = joined.select(
+        *df.columns, rebuild(F.col("__toks"), F.col("__rem")).alias("__r")
     )
+    cleaned = F.col("__r").getField("__cleaned")
     sel = []
     for c in df.columns:
         if c == out_col:
-            sel.append(F.col("__cleaned").alias(out_col))
+            sel.append(cleaned.alias(out_col))
         else:
             sel.append(F.col(c))
     if out_col not in df.columns:
-        sel.append(F.col("__cleaned").alias(out_col))
-    sel.append(F.col("__nrem").alias("n_removed_tokens"))
+        sel.append(cleaned.alias(out_col))
+    sel.append(F.col("__r").getField("__nrem").alias("n_removed_tokens"))
     return rebuilt.select(*sel)
 
 

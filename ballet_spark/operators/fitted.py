@@ -451,7 +451,7 @@ class KNNImputer(SparkTransformer):
     Approximation contract: neighbors are restricted to rows sharing
     the ``by`` bucket (a category, or a hash bucket of the entity key);
     within each bucket an EXACT k-nearest-donor mean imputation runs in
-    one Arrow-batched ``applyInPandas`` kernel. Neighbors never cross
+    one grouped ``applyInArrow`` kernel. Neighbors never cross
     buckets — that is the entire approximation, and it is what makes
     the operator linear: one shuffle on ``by``, numpy block-matrix
     distances inside. At scale, pick ``by`` with enough cardinality to
@@ -459,8 +459,10 @@ class KNNImputer(SparkTransformer):
 
     Distances are squared-euclidean over ``feature_cols`` (must be
     non-null); ties break on (distance, ``id_col``), so results are
-    deterministic and replayable by a SQL oracle. Missing targets with
-    zero donors in their bucket stay NULL.
+    deterministic and replayable by a SQL oracle. A NULL or NaN target
+    is missing; missing targets with zero donors in their bucket stay
+    NULL. Every input column passes through as Arrow, unchanged (a NaN
+    stays NaN).
     """
 
     def __init__(
@@ -486,6 +488,8 @@ class KNNImputer(SparkTransformer):
 
     def transform_df(self, df, cols, alias, ctx):
         import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
         from pyspark.sql.types import DoubleType, StructField, StructType
 
         if len(cols) != 1:
@@ -497,10 +501,12 @@ class KNNImputer(SparkTransformer):
         k = self.n_neighbors
         schema = StructType(list(df.schema.fields) + [StructField(alias, DoubleType())])
 
-        def _kern(pdf):
-            X = pdf[feats].to_numpy(dtype=float)
-            v = pdf[target].to_numpy(dtype=float)
-            ids = pdf[idc].to_numpy()
+        def _kern(t: pa.Table) -> pa.Table:
+            # as float64 NumPy, NULL -> NaN: a NULL target is missing
+            # like a NaN one
+            X = np.column_stack([pc.cast(t[f], pa.float64()).to_numpy() for f in feats])
+            v = pc.cast(t[target], pa.float64()).to_numpy()
+            ids = t[idc].to_numpy()
             out = v.copy()
             miss = np.isnan(v)
             don = ~miss
@@ -526,11 +532,10 @@ class KNNImputer(SparkTransformer):
                             sel = np.arange(len(row))
                         order = np.lexsort((dids[sel], row[sel]))[:kk]
                         out[mi] = dv[sel[order]].sum() / kk
-            res = pdf.copy()
-            res[alias] = out
-            return res
+            # a missing target without donors stays NaN here: SQL NULL
+            return t.append_column(alias, pa.array(out, mask=np.isnan(out)))
 
-        return df.groupBy(by).applyInPandas(_kern, schema), [alias]
+        return df.groupBy(by).applyInArrow(_kern, schema), [alias]
 
 
 class IterativeImputer(SparkTransformer):

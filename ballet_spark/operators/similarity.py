@@ -523,6 +523,11 @@ def ivf_topk(
         C,
         vec_col=vec_col,
     )
+    # a NULL vector's NULL centroid becomes -1, which no probe names:
+    # with a non-nullable key the join infers no isnotnull(centroid_id)
+    # filter, which Catalyst would push below the projection as a
+    # second call of the assignment kernel
+    tagged = tagged.withColumn("centroid_id", F.coalesce("centroid_id", F.lit(-1)))
     cand = tagged.join(F.broadcast(probe_df), "centroid_id").filter(
         F.col("query_id") != F.col("neighbor_id")
     )

@@ -1,11 +1,12 @@
 """SparkSession factory tuned for the engine.
 
 Defaults follow the scale design: AQE on (runtime skew-join splitting
-and partition coalescing), Arrow enabled for every pandas-UDF boundary,
-UTC session timezone so results compare bit-stably against external
-oracles, and shuffle partitions sized to the local core count (callers
-on a real cluster should set ``spark.sql.shuffle.partitions`` to
-~2-3x total cores instead).
+and partition coalescing), Arrow enabled for the driver's pandas
+conversions and ballet's pandas user functions (engine kernels cross
+as Arrow regardless), UTC session timezone so results compare
+bit-stably against external oracles, and shuffle partitions sized to
+the local core count (callers on a real cluster should set
+``spark.sql.shuffle.partitions`` to ~2-3x total cores instead).
 
 Importing this module on a Python worker also cuts the worker's fixed
 per-task cost. Before every task, pyspark's worker calls
@@ -26,11 +27,14 @@ already lazy.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
-import shutil
 import sys
 import tempfile
+import zipfile
 import zipimport
+from pathlib import Path
 
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
@@ -72,29 +76,38 @@ def _install_zip_cache_guard() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def _remove_zip(zip_path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(zip_path)
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make ``ballet_spark`` importable on executor Python workers.
 
     The programmatic equivalent of ``spark-submit --py-files`` (the
-    north-rule deployment shape): zip the package and ``addPyFile`` it,
-    so pandas-UDF closures that reference module-level functions
-    unpickle on any executor, local or remote.
+    north-rule deployment shape): zip the package's sources and
+    ``addPyFile`` them, so kernel closures that reference module-level
+    functions unpickle on any executor, local or remote. The zip is
+    removed at interpreter exit, not after ``addPyFile``: local
+    executors fetch it lazily when a task starts.
     """
     import ballet_spark
 
-    pkg_dir = os.path.dirname(os.path.abspath(ballet_spark.__file__))
+    pkg_dir = Path(ballet_spark.__file__).resolve().parent
     # pid-unique path: a fixed shared name races concurrent processes
     # (one truncates the zip while another's addPyFile copies it,
     # shipping a corrupt/mismatched package to executors). Built once
     # per process, reused by later sessions in the same process.
-    stamp = os.path.join(
-        tempfile.gettempdir(), f"ballet_spark_pyfiles_{os.getpid()}"
+    zip_path = os.path.join(
+        tempfile.gettempdir(), f"ballet_spark_pyfiles_{os.getpid()}.zip"
     )
-    zip_path = stamp + ".zip"
     if not os.path.exists(zip_path):
-        zip_path = shutil.make_archive(
-            stamp, "zip", os.path.dirname(pkg_dir), "ballet_spark"
-        )
+        # sources only: zipimport never loads a __pycache__ entry (it
+        # looks for mod.pyc beside mod.py)
+        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+            for path in sorted(pkg_dir.rglob("*.py")):
+                zf.write(path, path.relative_to(pkg_dir.parent))
+        atexit.register(_remove_zip, zip_path)
     spark.sparkContext.addPyFile(zip_path)
 
 

@@ -1,9 +1,12 @@
 """Per-query optimization harness (guide §1.4) — NOT the official bench.
 
 Times individual declared queries in isolation with the noop sink
-(computation only, no output write) AND with the official bench's
-count+xxhash64 sink, dumps ``.explain("formatted")`` for the
-plans/r06 deliverables, and leaves the frozen ``bench.py`` untouched.
+(computation only, no output write), dumps ``.explain("formatted")``
+for the plans/r06 deliverables, and leaves the frozen ``bench.py``
+untouched. Each query's JSON line also carries ``digest`` =
+``[rows, sum of xxhash64 over all output columns]`` (doubles hashed
+unrounded), computed once before the timed draws, so two checkouts
+can be compared for bit-identical output without an oracle.
 
 Usage:
     python bench_extra.py q1_pricing_summary minhash_lsh_dups ...
@@ -43,10 +46,16 @@ def noop_sink(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def agg_sink(df):
-    import bench
+def digest(df) -> list[int]:
+    """``[rows, sum of xxhash64(all columns)]``: equal digests mean the
+    same multiset of rows (up to a 64-bit hash collision)."""
+    from pyspark.sql import functions as F
 
-    bench.sink(df)
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("d"),
+    ).first()
+    return [int(row["n"]), int(row["d"] or 0)]
 
 
 def main():
@@ -89,6 +98,8 @@ def main():
             with open(os.path.join(explain_dir, f"{n}_{suffix}.txt"), "w") as f:
                 f.write(buf.getvalue())
             spark.catalog.clearCache()
+        dig = digest(qs[n](spark, sf_dir))
+        spark.catalog.clearCache()
         # construction (may include eager fits/persists) vs sink
         draws = []
         for _ in range(reps):
@@ -101,7 +112,7 @@ def main():
             spark.catalog.clearCache()
         best = min(draws, key=lambda d: d[2])
         out[n] = {"construct": best[0], "noop": best[1], "total": best[2],
-                  "draws": draws}
+                  "draws": draws, "digest": dig}
         print(json.dumps({n: out[n]}), flush=True)
     print(json.dumps({"summary": {k: v["total"] for k, v in out.items()},
                       "sf": sf_dir}))

@@ -1,8 +1,12 @@
-"""Keep-rule guard, static (no Spark session): every ``ballet_spark``
-module must be imported, directly or transitively, by the entry
-module, the benchmarks or a script — or be named on the allowlist
-below with the SURVEY row that keeps it. A module that only tests
-import is dead weight: delete it with its tests."""
+"""Static guards (no Spark session).
+
+Keep rule: every ``ballet_spark`` module must be imported, directly or
+transitively, by the entry module, the benchmarks or a script — or be
+named on the allowlist below with the SURVEY row that keeps it. A
+module that only tests import is dead weight: delete it with its tests.
+
+Boundary rule: the kernel modules cross into Python as Arrow only, so
+they never import pandas or call a pandas boundary."""
 
 import ast
 from pathlib import Path
@@ -82,3 +86,31 @@ def test_every_module_reached_or_allowlisted():
     assert not unreached, (
         f"modules no query, benchmark or script imports: {unreached}"
     )
+
+
+# modules whose kernels cross into Python as Arrow only
+ARROW_ONLY = [
+    "ballet_spark/functions/text.py",
+    "ballet_spark/functions/lm.py",
+    "ballet_spark/functions/classifier.py",
+    "ballet_spark/operators/dedup.py",
+]
+PANDAS_BOUNDARIES = {"pandas_udf", "mapInPandas", "applyInPandas", "toPandas"}
+
+
+def test_kernel_modules_never_import_pandas():
+    for rel in ARROW_ONLY:
+        path = REPO / rel
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            elif isinstance(node, ast.Attribute):
+                assert node.attr not in PANDAS_BOUNDARIES, (rel, node.lineno)
+                continue
+            else:
+                continue
+            assert not any(n.split(".")[0] == "pandas" for n in names), (
+                rel, node.lineno
+            )

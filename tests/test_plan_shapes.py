@@ -24,38 +24,58 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-_SCALAR_EVAL_TYPES = frozenset({
-    PythonEvalType.SQL_BATCHED_UDF,
-    PythonEvalType.SQL_ARROW_BATCHED_UDF,
-    PythonEvalType.SQL_SCALAR_PANDAS_UDF,
-    PythonEvalType.SQL_SCALAR_PANDAS_ITER_UDF,
+# the three boundary shapes of an engine kernel: arrow_udf (column
+# valued), mapInArrow (row sets), applyInArrow (grouped)
+_ARROW_EVAL_TYPES = frozenset({
     PythonEvalType.SQL_SCALAR_ARROW_UDF,
-    PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF,
+    PythonEvalType.SQL_MAP_ARROW_ITER_UDF,
+    PythonEvalType.SQL_GROUPED_MAP_ARROW_UDF,
 })
 
 
-def _scalar_udf_eval_types(df) -> list[int]:
-    """``evalType`` of every scalar ``PythonUDF`` expression in the
-    analyzed plan (map and grouped kernels, which are ``PythonUDF``
-    expressions too, are left out). The executed plan prints a pandas
-    and an Arrow scalar UDF alike (both ``ArrowEvalPython``); the eval
-    type tells them apart: 200 = ``SQL_SCALAR_PANDAS_UDF``, 250 =
-    ``SQL_SCALAR_ARROW_UDF``."""
+def _nodes(node, seen=None):
+    """Nodes of an executed plan, unwrapped through AQE, query stages
+    and the cached relations' own plans (each cached plan once, however
+    many scans read it)."""
+    from pyspark import SparkContext
+
+    seen = set() if seen is None else seen
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _nodes(node.executedPlan(), seen)
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _nodes(node.plan(), seen)
+        return
+    yield node
+    if name == "InMemoryTableScanExec":
+        cached = node.relation().cachedPlan()
+        key = SparkContext._jvm.System.identityHashCode(cached)
+        if key not in seen:
+            seen.add(key)
+            yield from _nodes(cached, seen)
+    children = node.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i), seen)
+
+
+def _python_udfs(df) -> list[tuple[str, int, int]]:
+    """``(plan node, evalType, resultId)`` of every ``PythonUDF`` that
+    the executed plan evaluates: scalar UDFs in ``ArrowEvalPython``,
+    map and grouped kernels in their own nodes. The plan string prints
+    a pandas and an Arrow scalar UDF alike (both ``ArrowEvalPython``);
+    the eval type tells them apart (200 = ``pandas_udf``, 250 =
+    ``arrow_udf``). One kernel evaluated by two nodes (a projection
+    collapsed into two consumers, a filter pushed below it) shows as
+    one ``resultId`` twice."""
     out = []
-    nodes = [df._jdf.queryExecution().analyzed()]
-    while nodes:
-        node = nodes.pop()
-        kids = node.children()
-        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    for node in _nodes(df._jdf.queryExecution().executedPlan()):
         exprs = node.expressions()
         todo = [exprs.apply(i) for i in range(exprs.size())]
         while todo:
             expr = todo.pop()
-            if (
-                expr.nodeName() == "PythonUDF"
-                and expr.evalType() in _SCALAR_EVAL_TYPES
-            ):
-                out.append(expr.evalType())
+            if expr.nodeName() == "PythonUDF":
+                out.append((node.nodeName(), expr.evalType(), expr.resultId().id()))
             kids = expr.children()
             todo.extend(kids.apply(i) for i in range(kids.size()))
     return out
@@ -357,44 +377,80 @@ def test_ivf_probe_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_vector_queries_cross_python_as_arrow_only(spark):
-    """The vector stack's kernels take Arrow batches, never pandas
-    frames; semantic_dedup scores its clusters in ONE grouped Arrow
-    apply."""
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    for name in (
-        "embedding_topk",
-        "embedding_lsh_topk",
-        "embedding_ivf_fixed_topk",
-        "semantic_dedup_docs",
-    ):
-        plan = _plan(qs[name](spark, "/root/testdata/sf0.001"))
-        for node in ("MapInPandas", "FlatMapGroupsInPandas"):
-            assert node not in plan, (name, node)
-        if name == "semantic_dedup_docs":
-            assert plan.count("FlatMapGroupsInArrow") == 1
+# the Python kernel nodes of the queries whose kernels moved to Arrow
+_KERNEL_NODES = {
+    "lang_id_heuristic": {"ArrowEvalPython": 1},
+    "simhash_dups": {"ArrowEvalPython": 1},
+    "doc_fingerprints": {"ArrowEvalPython": 1},
+    "repetition_filter_docs": {"ArrowEvalPython": 1},
+    "lm_perplexity_docs": {"ArrowEvalPython": 1},  # the fit ran eagerly
+    "nb_classifier_docs": {"ArrowEvalPython": 1},
+    "exactsubstr_dedup_docs": {"ArrowEvalPython": 1, "MapInArrow": 1},
+    "knn_impute_value": {"FlatMapGroupsInArrow": 1},
+    "curation_pipeline_v2": {"ArrowEvalPython": 2, "MapInArrow": 2},
+    # every cluster in ONE grouped apply
+    "semantic_dedup_docs": {"ArrowEvalPython": 1, "FlatMapGroupsInArrow": 1},
+}
 
 
-def test_vector_scalar_udfs_are_arrow_udfs(spark):
-    """Every scalar kernel of the vector queries is an ``arrow_udf``,
-    not a ``pandas_udf``; the helper does see a pandas scalar UDF where
-    one is left (``lang_id_heuristic``)."""
+def test_every_query_crosses_python_as_arrow_once_per_kernel(spark):
+    """Engine kernels cross into Python one way, as Arrow: every Python
+    kernel of every query is an ``arrow_udf``, ``mapInArrow`` or
+    ``applyInArrow`` (no ``MapInPandas``, ``FlatMapGroupsInPandas`` or
+    pandas scalar UDF), except in ``grouped_apply_normalize``, whose
+    user function is ballet's pandas surface. And each kernel is
+    evaluated by one plan node, so no collapsed projection or pushed
+    filter runs a kernel twice. The queries of the converted kernels
+    show exactly their kernels."""
+    from collections import Counter
+
     import __spark_entry__ as entry
     from test_entry_oracle import SF_DIR
 
-    qs = entry.queries()
-    for name in (
-        "embedding_lsh_topk",
-        "embedding_ivf_fixed_topk",
-        "semantic_dedup_docs",
-    ):
-        types = _scalar_udf_eval_types(qs[name](spark, SF_DIR))
-        assert types, name
-        assert set(types) == {PythonEvalType.SQL_SCALAR_ARROW_UDF}, (name, types)
-    types = _scalar_udf_eval_types(qs["lang_id_heuristic"](spark, SF_DIR))
-    assert PythonEvalType.SQL_SCALAR_PANDAS_UDF in types, types
+    from ballet_spark.cache import release_caches
+
+    kernels = 0
+    for name, query in entry.queries().items():
+        udfs = _python_udfs(query(spark, SF_DIR))
+        release_caches(None)
+        kernels += len(udfs)
+        if name == "grouped_apply_normalize":
+            assert [u[:2] for u in udfs] == [
+                ("FlatMapGroupsInPandas", PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF)
+            ], udfs
+            continue
+        assert all(t in _ARROW_EVAL_TYPES for _, t, _ in udfs), (name, udfs)
+        assert not any("Pandas" in n for n, _, _ in udfs), (name, udfs)
+        twice = [r for r, c in Counter(r for _, _, r in udfs).items() if c > 1]
+        assert not twice, (name, udfs)
+        if name in _KERNEL_NODES:
+            assert Counter(n for n, _, _ in udfs) == _KERNEL_NODES[name], (name, udfs)
+    assert kernels > 30  # the walk does see the kernels
+
+
+def test_python_udf_walk_sees_pandas_udfs_and_double_evaluation(spark):
+    """Positive controls for the guard above: a ``PandasSeriesTransformer``
+    column is a pandas scalar UDF (200), and a kernel column read by both
+    sides of an uncached self-join is evaluated twice."""
+    import pandas as pd
+
+    from ballet_spark.operators.base import PandasSeriesTransformer
+    from ballet_spark.operators.dedup import simhash_col
+
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    col = PandasSeriesTransformer(plus_one).transform_exprs(
+        [F.col("id").cast("double")], None
+    )[0]
+    udfs = _python_udfs(spark.range(3).select(col))
+    assert [u[:2] for u in udfs] == [
+        ("ArrowEvalPython", PythonEvalType.SQL_SCALAR_PANDAS_UDF)
+    ]
+    d = spark.range(3).select("id", simhash_col(F.col("id").cast("string")).alias("h"))
+    udfs = _python_udfs(d.alias("a").join(d.alias("b"), "h"))
+    assert len(udfs) > 1 and len({r for _, _, r in udfs}) == 1, udfs
+    assert {t for _, t, _ in udfs} == {PythonEvalType.SQL_SCALAR_ARROW_UDF}
 
 
 def test_gopher_filter_is_shuffle_free_map(spark, pages_parquet):
@@ -516,23 +572,6 @@ def test_pii_and_segment_removal_are_shuffle_free_maps(spark):
     it is the round-robin spread, never a hash partitioning of the
     corpus."""
     import __spark_entry__ as entry
-
-    def _nodes(node):
-        # the executed tree, unwrapped through AQE, query stages and
-        # the cached relation's own plan
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            yield from _nodes(node.executedPlan())
-            return
-        if name.endswith("QueryStageExec"):
-            yield from _nodes(node.plan())
-            return
-        yield node
-        if name == "InMemoryTableScanExec":
-            yield from _nodes(node.relation().cachedPlan())
-        children = node.children()
-        for i in range(children.size()):
-            yield from _nodes(children.apply(i))
 
     def _assert_map_only_plus_spread(df) -> None:
         # exactly one exchange, the round-robin spread, wherever it sits

@@ -7,13 +7,12 @@ oracles, so they get fuzzed harder than example-based tests go."""
 import hashlib
 
 import numpy as np
-import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ballet_spark.operators.dedup import simhash_pdf
+from ballet_spark.operators.dedup import simhash
 from ballet_spark.operators.encoders import contrast_matrix
-from ballet_spark.functions.text import rolling_fingerprint_pdf
+from ballet_spark.functions.text import rolling_fingerprint
 
 texts = st.text(
     alphabet=st.sampled_from("abcdefg XYZ.!?\t\n"), min_size=0, max_size=200
@@ -37,7 +36,7 @@ def _simhash_reference(t: str, bits: int = 64) -> int:
 @settings(max_examples=150, deadline=None)
 @given(texts)
 def test_simhash_matches_slow_reference(t):
-    got = simhash_pdf(pd.Series([t])).iloc[0]
+    got = simhash([t])[0]
     assert got == _simhash_reference(t)
 
 
@@ -47,8 +46,7 @@ def test_simhash_invariant_under_token_spacing(t):
     """SimHash is a bag-of-tokens function: whitespace runs don't
     matter."""
     respaced = "  ".join(t.split())
-    a = simhash_pdf(pd.Series([t])).iloc[0]
-    b = simhash_pdf(pd.Series([respaced])).iloc[0]
+    a, b = simhash([t, respaced])
     assert a == b
 
 
@@ -71,7 +69,7 @@ def _fingerprint_reference(t: str, k: int = 8, mod: int = 2**61 - 1) -> int:
 @settings(max_examples=150, deadline=None)
 @given(texts)
 def test_rolling_fingerprint_matches_direct_polynomial(t):
-    got = rolling_fingerprint_pdf(pd.Series([t])).iloc[0]
+    got = rolling_fingerprint(t)
     assert got == _fingerprint_reference(t)
 
 

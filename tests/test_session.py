@@ -1,12 +1,16 @@
-"""The worker-side zip-cache guard of ``ballet_spark.session``.
+"""The worker-side zip-cache guard and the package shipping of
+``ballet_spark.session``.
 
 The contract tests call the installer directly (no Spark) and put the
 stdlib method back afterwards; the worker test checks that a Python
 worker running an engine kernel has the guard and the driver does not.
+The shipping test drives ``ship_package`` with a stub session.
 """
 
 import importlib
+import os
 import sys
+import types
 import zipfile
 import zipimport
 
@@ -15,11 +19,36 @@ import pytest
 
 from ballet_spark import session
 
-pytestmark = pytest.mark.skipif(
+needs_eager_invalidate = pytest.mark.skipif(
     sys.version_info >= (3, 13)
     or not hasattr(zipimport.zipimporter, "invalidate_caches"),
     reason="zipimporter.invalidate_caches is already lazy or absent",
 )
+
+
+def test_ship_package_zips_sources_and_removes_zip_at_exit(tmp_path, monkeypatch):
+    added, hooks = [], []
+    monkeypatch.setattr(session.tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(
+        session.atexit, "register", lambda fn, *a: hooks.append((fn, a))
+    )
+    stub = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(addPyFile=added.append)
+    )
+    session.ship_package(stub)
+    session.ship_package(stub)  # second session: same zip, no rebuild
+    zip_path = str(tmp_path / f"ballet_spark_pyfiles_{os.getpid()}.zip")
+    assert added == [zip_path, zip_path]
+    with zipfile.ZipFile(zip_path) as zf:
+        names = zf.namelist()
+    assert "ballet_spark/__init__.py" in names
+    assert "ballet_spark/operators/dedup.py" in names
+    assert all(n.endswith(".py") and "__pycache__" not in n for n in names), names
+    assert len(hooks) == 1
+    fn, args = hooks[0]
+    fn(*args)
+    assert not os.path.exists(zip_path)
+    fn(*args)  # an already-removed zip is not an error
 
 
 def _is_stdlib(method) -> bool:
@@ -62,6 +91,7 @@ def archive(tmp_path, monkeypatch):
     zipimport._zip_directory_cache.pop(path, None)
 
 
+@needs_eager_invalidate
 def test_unchanged_archive_is_read_at_most_once(guard, archive, reads):
     assert importlib.import_module("zc_mod_a").X == 1
     reads.clear()
@@ -70,6 +100,7 @@ def test_unchanged_archive_is_read_at_most_once(guard, archive, reads):
     assert reads.count(archive) <= 1
 
 
+@needs_eager_invalidate
 def test_rewritten_archive_is_reread(guard, archive, reads):
     importlib.import_module("zc_mod_a")
     importlib.invalidate_caches()
@@ -82,6 +113,7 @@ def test_rewritten_archive_is_reread(guard, archive, reads):
     assert importlib.import_module("zc_mod_b").Y == 2
 
 
+@needs_eager_invalidate
 def test_deleted_archive_falls_back_to_stdlib(guard, archive, reads, tmp_path):
     importlib.import_module("zc_mod_a")
     importlib.invalidate_caches()
@@ -94,12 +126,14 @@ def test_deleted_archive_falls_back_to_stdlib(guard, archive, reads, tmp_path):
     assert archive not in zipimport._zip_directory_cache
 
 
+@needs_eager_invalidate
 def test_second_install_does_not_rewrap(guard):
     first = zipimport.zipimporter.invalidate_caches
     session._install_zip_cache_guard()
     assert zipimport.zipimporter.invalidate_caches is first
 
 
+@needs_eager_invalidate
 def test_workers_run_the_guard_and_the_driver_does_not(spark):
     # nested, so it pickles by value: workers cannot import this module
     def _worker_probe(batches):
