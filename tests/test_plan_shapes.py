@@ -377,6 +377,62 @@ def test_ivf_probe_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_vector_queries_cross_python_as_arrow_only(spark):
+    """The vector stack's kernels take Arrow batches, never pandas
+    frames; semantic_dedup scores its clusters in ONE grouped Arrow
+    apply."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    for name in (
+        "embedding_topk",
+        "embedding_lsh_topk",
+        "embedding_ivf_fixed_topk",
+        "semantic_dedup_docs",
+    ):
+        plan = _plan(qs[name](spark, "/root/testdata/sf0.001"))
+        for node in ("MapInPandas", "FlatMapGroupsInPandas"):
+            assert node not in plan, (name, node)
+        if name == "semantic_dedup_docs":
+            assert plan.count("FlatMapGroupsInArrow") == 1
+
+
+def test_vector_scalar_udfs_are_arrow_udfs(spark):
+    """Every scalar kernel of the vector queries is an ``arrow_udf``,
+    not a ``pandas_udf``; the walk does see a pandas scalar UDF where
+    one is used (a ``PandasSeriesTransformer`` column)."""
+    import pandas as pd
+
+    import __spark_entry__ as entry
+    from test_entry_oracle import SF_DIR
+
+    from ballet_spark.cache import release_caches
+    from ballet_spark.operators.base import PandasSeriesTransformer
+
+    def scalar_types(df):
+        return [t for n, t, _ in _python_udfs(df) if n == "ArrowEvalPython"]
+
+    qs = entry.queries()
+    for name in (
+        "embedding_lsh_topk",
+        "embedding_ivf_fixed_topk",
+        "semantic_dedup_docs",
+    ):
+        types = scalar_types(qs[name](spark, SF_DIR))
+        release_caches(None)
+        assert types, name
+        assert set(types) == {PythonEvalType.SQL_SCALAR_ARROW_UDF}, (name, types)
+
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    col = PandasSeriesTransformer(plus_one).transform_exprs(
+        [F.col("id").cast("double")], None
+    )[0]
+    types = scalar_types(spark.range(3).select(col))
+    assert types == [PythonEvalType.SQL_SCALAR_PANDAS_UDF], types
+
+
 # the Python kernel nodes of the queries whose kernels moved to Arrow
 _KERNEL_NODES = {
     "lang_id_heuristic": {"ArrowEvalPython": 1},
