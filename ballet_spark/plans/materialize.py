@@ -192,15 +192,18 @@ def _append_rows(
     spark: SparkSession, rows: list[tuple], schema: str, path: str
 ) -> None:
     """Append driver-side ``rows`` (tuples in ``schema``'s column order)
-    to the parquet table at ``path``. The rows go in as a pyarrow
-    Table, which Spark plans as a LocalRelation instead of an RDD of
-    pickled rows. The Table is cast to ``schema``, so the parquet
-    schema is the one the DDL string names."""
+    to the parquet table at ``path`` as ONE file, written by one task.
+    The rows go in as a pyarrow Table, which Spark plans as a
+    LocalRelation instead of an RDD of pickled rows; a LocalRelation is
+    sliced over the default parallelism, so without the ``coalesce(1)``
+    every append would write one small file per slice. The Table is
+    cast to ``schema``, so the parquet schema is the one the DDL string
+    names."""
     import pyarrow as pa
 
     names = [field.split()[0] for field in schema.split(",")]
     table = pa.table(dict(zip(names, map(list, zip(*rows)))))
-    spark.createDataFrame(table, schema).write.mode("append").parquet(path)
+    spark.createDataFrame(table, schema).coalesce(1).write.mode("append").parquet(path)
 
 
 def row_hash(cols: Sequence[str]) -> F.Column:

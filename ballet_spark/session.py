@@ -8,6 +8,22 @@ bit-stably against external oracles, and shuffle partitions sized to
 the local core count (callers on a real cluster should set
 ``spark.sql.shuffle.partitions`` to ~2-3x total cores instead).
 
+Spark compiles every whole-stage-codegen stage and every generated
+projection, ordering and predicate into a Java class, and keeps the
+classes in an LRU cache of ``spark.sql.codegen.cache.maxEntries``
+entries, 100 by default. A query that needs more than 100 classes
+evicts its own classes before it runs again, so each repeat misses on
+every class and recompiles them all. ``scripts/codegen_profile.py``
+counted, on a 4-core host with pyspark 4.1.2: one ``perfbench``
+``backfill`` op compiles 134 classes on every run (2.2 s of compile
+time in an 8-10 s op) and ``curation_pipeline_v2`` at sf0.1 128-130
+(1.7 s), while the other 33 headline queries and the ``curation`` op
+(54) fit. With 1000 entries the repeats compile 6 and 0; summed over
+all 34 queries and both ops, the repeats compile 0.8% of the classes
+the first runs compile. The conf is static: Spark reads it once per
+JVM, when the code generator is first used, so it applies only when
+``get_spark`` creates the session, and ``extra_conf`` overrides it.
+
 Importing this module on a Python worker also cuts the worker's fixed
 per-task cost. Before every task, pyspark's worker calls
 ``importlib.invalidate_caches()`` (``setup_spark_files``), and on
@@ -175,6 +191,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated-class cache sized to the engine's working set (see
+        # the module docstring); static: read once per JVM
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # bucketed tables (saveAsTable/bucketBy) land here instead of
         # ./spark-warehouse in the caller's cwd
         .config(

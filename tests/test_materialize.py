@@ -386,6 +386,21 @@ def test_lineage_schema_empty_unit_and_rerun(spark, webtext_df, tmp_path):
     assert spark.read.parquet(flin).count() == 8 * 2
 
 
+def test_each_lineage_append_writes_one_file(spark, webtext_df, tmp_path):
+    """Every batch appends its lineage rows and its feature-lineage rows
+    as one parquet file each, however many rows the append holds."""
+    df, feats = _two_features(webtext_df)
+    out, lin, flin = (tmp_path / n for n in ("m", "lin", "flin"))
+    materialize(
+        spark, df, feats, str(out), str(lin), "snapA", n_units=4,
+        units_per_batch=2, feature_lineage_path=str(flin),
+    )
+    assert len(list(lin.glob("*.parquet"))) == 2
+    assert len(list(flin.glob("*.parquet"))) == 2
+    assert spark.read.parquet(str(lin)).count() == 4
+    assert spark.read.parquet(str(flin)).count() == 4 * 2
+
+
 @pytest.mark.parametrize("n_units", [2, 8])
 def test_digest_grid_builds_one_hash_per_feature(
     spark, webtext_df, tmp_path, monkeypatch, n_units

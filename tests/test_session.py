@@ -1,10 +1,12 @@
-"""The worker-side zip-cache guard and the package shipping of
-``ballet_spark.session``.
+"""The worker-side zip-cache guard, the package shipping and the
+generated-class cache size of ``ballet_spark.session``.
 
 The contract tests call the installer directly (no Spark) and put the
 stdlib method back afterwards; the worker test checks that a Python
 worker running an engine kernel has the guard and the driver does not.
-The shipping test drives ``ship_package`` with a stub session.
+The shipping test drives ``ship_package`` with a stub session. The
+compile-reuse test counts the classes a multi-stage build compiles
+(Spark's ``CodegenMetrics``) on its first run and on a repeat.
 """
 
 import importlib
@@ -175,3 +177,86 @@ def test_workers_run_the_guard_and_the_driver_does_not(spark):
     assert all(r["patched"] for r in out), out
     assert all(r["reads"] == 0 for r in out), out
     assert _is_stdlib(zipimport.zipimporter.invalidate_caches)
+
+
+def _backfill_build(spark, pages, root: str):
+    """One training-set build from a fresh root: materialize
+    ``bench._backfill_matrix``'s 12 features, read the matrix back, as-of
+    join per-page label probes to it, add per-domain running stats and
+    fit a scaler and a target encoder."""
+    from pyspark.sql import functions as F
+
+    from ballet_spark.core import Feature, FeatureEngineeringPipeline
+    from ballet_spark.functions.text import char_count, punct_ratio, quality_score, token_count
+    from ballet_spark.operators.asof import asof_join
+    from ballet_spark.operators.base import SparkFunctionTransformer as Fn
+    from ballet_spark.operators.encoders import TargetEncoder
+    from ballet_spark.operators.fitted import StandardScaler
+    from ballet_spark.operators.sessionize import SessionId
+    from ballet_spark.operators.window_ops import (
+        CumAgg, Delta, ForwardFill, Lag, Rolling, SnapshotIndex, TimeSinceLast,
+    )
+    from ballet_spark.plans.materialize import materialize, read_matrix
+    from ballet_spark.plans.skew import salted_running_agg
+
+    feats = [
+        Feature("text", Fn(char_count), output="n_chars"),
+        Feature("text", Fn(token_count), output="n_tokens"),
+        Feature("text", Fn(punct_ratio), output="punct_r"),
+        Feature("text", Fn(quality_score), output="quality"),
+        Feature("text_len", Lag(1), output="len_lag1"),
+        Feature("text_len", Delta(1), output="len_delta"),
+        Feature("text_len", Rolling("mean", 5), output="len_roll5"),
+        Feature("text_len", CumAgg("sum"), output="len_cum"),
+        Feature("lang", ForwardFill(), output="lang_ffill"),
+        Feature("url", SnapshotIndex(), output="snap_idx"),
+        Feature("url", TimeSinceLast(), output="gap_s"),
+        Feature("url", SessionId(gap_s=24 * 3600), output="session_id"),
+    ]
+    source = pages.withColumn("text_len", F.length("text").cast("double"))
+    materialize(
+        spark, source, feats, f"{root}/m", f"{root}/lineage", "s0",
+        feature_lineage_path=f"{root}/feature_lineage",
+    )
+    matrix = read_matrix(spark, f"{root}/m", snapshot="s0").select(
+        "url", "warc_ts", *(f.alias for f in feats)
+    )
+    probes = pages.select(
+        "url",
+        (F.col("warc_ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
+        (F.length("text") > 400).cast("double").alias("label"),
+    )
+    labelled = asof_join(probes, matrix, on="url", left_ts="ts", right_ts="warc_ts")
+    labelled = labelled.withColumn("domain", F.split("url", "/")[2])
+    stats = salted_running_agg(
+        labelled, key="domain", time_col="ts", value_col="n_chars",
+        aggs=("count", "sum", "max"), top_k=3,
+    )
+    pipe = FeatureEngineeringPipeline([
+        Feature("label", None, output="y"),
+        Feature(["run_count", "run_sum", "run_max"], None, output="domain_run"),
+        Feature(["quality", "len_delta"], StandardScaler(), output="z"),
+        Feature("domain", TargetEncoder(), output="domain_te"),
+    ], time_col="ts")
+    out = pipe.fit(labelled, y="label").transform(stats)
+    return out.agg(
+        F.count(F.lit(1)), F.sum(F.xxhash64(*out.columns).cast("decimal(38,0)"))
+    ).first()
+
+
+def test_repeat_build_reuses_generated_classes(spark, webtext_df, tmp_path):
+    """The generated-class cache holds a whole multi-stage build: run
+    again into a fresh root, the same build compiles (almost) nothing.
+    With Spark's 100-entry default, a build that needs more than 100
+    classes evicts its own classes and recompiles them every run."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    counts, results = [], []
+    for run in ("first", "repeat"):
+        before = compiles.getCount()
+        results.append(_backfill_build(spark, webtext_df, str(tmp_path / run)))
+        counts.append(compiles.getCount() - before)
+    first, repeat = counts
+    assert results[0] == results[1]
+    assert first > 100, counts
+    assert repeat <= 0.1 * first, counts
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
